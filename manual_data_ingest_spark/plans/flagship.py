@@ -24,7 +24,9 @@ _CUTOFF = "1998-06-01"
 
 FLAGSHIP_ORACLE = f"""
 SELECT l_orderkey,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+            AS DOUBLE) AS revenue,
        o_orderdate
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
@@ -51,8 +53,12 @@ def flagship_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(lineitem.filter(F.col("l_shipdate") > _CUTOFF),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-             .alias("revenue"))
+        # DECIMAL sum (PARITY #62): an exact half-cent total rounds the
+        # same on both engines, where a double sum lands on either side
+        # of the tie depending on summation order
+        .agg(F.round(F.sum(F.col("l_extendedprice").cast("decimal(15,2)")
+                           * (1 - F.col("l_discount").cast("decimal(15,2)"))), 2)
+             .cast("double").alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)

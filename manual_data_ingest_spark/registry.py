@@ -5,6 +5,9 @@ Each operator module registers its queries with :func:`register`; the
 ``all_queries()`` / ``all_oracles()`` see the full inventory. The driver
 contract (``__spark_entry__.py``) is a thin re-export of these dicts.
 
+``all_queries()`` returns operators in registration order, which the
+import order in ``plans.catalog`` fixes; no file on disk affects it.
+
 Discipline enforced by convention here (SURVEY.md §5):
 - every computed column is aliased identically in Spark code and oracle SQL;
 - doubles are rounded (2dp money, 6dp similarity) before they reach a hash;
@@ -62,196 +65,11 @@ def slow_twins() -> dict[str, str]:
     return dict(_TWIN_OF)
 
 
-#: Driver-facing grading order. The driver grades only the FIRST 50
-#: registry entries per round (CORRECTNESS_r0*.json are exactly dict
-#: order, truncated), so dict order controls which operators ever earn
-#: a driver verdict. Policy since r2, made file-driven in r3 per the r2
-#: verdict: operators already hash-green in any ``CORRECTNESS_r*.json``
-#: go to the TAIL (their verdicts are on record; re-grading buys
-#: nothing), operators graded RED but never green lead (a fix must show
-#: up as a driver green), then the curated never-graded priority below,
-#: then all remaining never-graded names in registration order. The
-#: full 277-query local oracle sweep (tests/oracle_check.py) remains
-#: the regression gate for everything past the 50-slot window.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    # r8 window (50 slots), per the r7 verdict's Next-round #1: stage
-    # the streaming block (largest family never driver-graded), the
-    # pipeline tails, the remaining text/multimodal names, and the 10
-    # r7-born ops. Earlier rounds' curated lists are all driver-green
-    # on record and filtered out automatically, so this tuple only
-    # needs the CURRENT priorities. Composition: 10 r7-born ops +
-    # streaming (12) + pipeline (14) + text tails (11) +
-    # multimodal (3) = 50. The residual never-graded pool (37) is the
-    # ml/dedup/sim tails, staged for r9 to zero the pool.
-    "join_skew_aqe", "agg_benford_test", "win_holt_linear",
-    "scan_nested_pruned", "ingest_id_gap_islands", "udf_sql_function",
-    "graph_reach_recursive", "ml_isotonic_calibration",
-    "ml_conformal_interval", "stream_static_enrich",
-    "stream_tumbling", "stream_sliding", "stream_session",
-    "stream_dedup", "stream_join", "stream_stateful_running",
-    "stream_foreach_batch_sink", "stream_transform_with_state",
-    "stream_join_outer", "stream_topk_windowed",
-    "stream_error_rate_alert", "stream_dedup_within_watermark",
-    "pipeline_ingest_register", "pipeline_training_mix",
-    "pipeline_rag_index", "pipeline_incremental_refresh",
-    "pipeline_feature_store", "pipeline_attribution",
-    "pipeline_bpe_train", "pipeline_train_eval_split",
-    "pipeline_filter_funnel", "pipeline_eval_pack",
-    "pipeline_preference_pairs", "pipeline_dataset_card",
-    "pipeline_quality_filter_ablation", "pipeline_curriculum_order",
-    "text_chunk_overlap", "text_unigram_logprob", "text_zipf_slope",
-    "text_vocab_growth", "text_top_terms", "text_boilerplate_prefix",
-    "text_ngram_novelty", "text_cooccurrence_pmi", "text_js_divergence",
-    "text_domain_classify", "text_tokenizer_fertility",
-    "multimodal_shard_assign", "multimodal_phash_dedup",
-    "multimodal_pair_batches",
-)
-
-#: REGRADE list (r9 verdict task 4): green-on-record operators whose
-#: IMPLEMENTATION changed after their last driver verdict — their green
-#: predates the code now shipping, so they jump the green tail and
-#: re-enter the next 50-slot grading window. Hand-curated per round,
-#: pruned once the post-rewrite green lands (same lifecycle as
-#: _DRIVER_PRIORITY). The full r10 composition (35 entries) re-graded
-#: green in CORRECTNESS_r10.json and was pruned per the r10 verdict
-#: task 5. Current composition: the r11 rewrites (running-sum NULL
-#: semantics + its consumers, the OHLC min_by/max_by rewrite, the
-#: range-halo consumers, and every ranking.py consumer — the
-#: materialization-strategy hook touched the shared primitive).
-_REGRADE_PRIORITY: tuple[str, ...] = (
-    # The 16-entry r12 batches-1-3 composition re-graded green in
-    # CORRECTNESS_r12.json (all 16 hash_match) and was pruned per the
-    # rotation discipline. Current composition (r12 advice, medium):
-    # the r12 batch-4 rewrites (d9fc40d) landed AFTER the driver's r12
-    # grading window was staged, so their standing greens predate the
-    # code that now runs — outputs proven identical by the local 3-SF
-    # oracle sweeps, but each executed plan changed.
-    "udf_grouped_agg", "text_ngrams", "scan_footer_stats",
-    "scalar_try_funcs", "ingest_row_fingerprint",
-    "agg_winsorized_stats", "ingest_quarantine",
-    # r13 optimization rewrites (appended as the round proceeds).
-    "ingest_validate", "pipeline_llm_prep", "text_wordcount",
-    "provenance_chain", "flagship_q3", "dedup_exact",
-    "agg_rfm_segments",
-)
-
-
-def _latest_verdicts() -> dict[str, bool]:
-    """Latest driver verdict per name across ``CORRECTNESS_r*.json``.
-
-    Files are processed in NUMERIC round order (r11 advice: the
-    lexicographic sort is chronological only while round numbers stay
-    zero-padded — r100 would sort before r99) and later rounds
-    OVERWRITE earlier ones, so the value is each name's most recent
-    hash verdict — an operator that was green in r2 but regresses red
-    in a later round re-enters the grading head instead of hiding in
-    the tail forever (r3 advisor, medium).
-    """
-    import glob
-    import json
-    import os
-    import re
-
-    def _round_no(p: str) -> int:
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, bool] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
-                       key=_round_no):
-        try:
-            with open(path) as fh:
-                verdicts = json.load(fh)
-        except (OSError, ValueError):  # pragma: no cover — corrupt file
-            continue
-        for name, v in verdicts.items():
-            latest[name] = bool(isinstance(v, dict) and v.get("hash_match"))
-    return latest
-
-
-def _last_graded_round() -> dict[str, int]:
-    """Name → the round number of its most recent driver verdict.
-
-    Drives the green-tail ROTATION (r10 verdict task 5b): with the
-    red/never-graded pool at zero, the grading window's free slots
-    should buy periodic confidence re-samples of the STALEST greens
-    (r1/r2 vintage) instead of re-grading whatever registration order
-    happens to put first. Because a re-sample updates the op's latest
-    round, the rotation self-advances: next round a different cohort
-    of oldest greens fills the tail."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:  # pragma: no cover — foreign file matched the glob
-            continue
-        try:
-            with open(path) as fh:
-                verdicts = json.load(fh)
-        except (OSError, ValueError):  # pragma: no cover — corrupt file
-            continue
-        for name in verdicts:
-            # max(), not file-sort order: the glob sorts lexicographically,
-            # which is chronological only while round numbers stay
-            # zero-padded to the same width — r100 (or an unpadded file)
-            # would sort before r99 and silently overwrite newer verdicts
-            # (r11 advice)
-            rounds[name] = max(rounds.get(name, 0), int(m.group(1)))
-    return rounds
-
-
-def _driver_green() -> frozenset[str]:
-    """Names whose LATEST on-disk driver verdict is hash-green.
-
-    File-driven (r2 verdict item 1): the driver writes one file per
-    round next to the package; parsing them here means the grading
-    window rotates automatically each round with zero hand-maintained
-    frozensets. Latest-verdict semantics (r3 advisor): a name whose most
-    recent verdict is red never lands here, so regressions and unfixed
-    reds re-enter the head of the order.
-    """
-    return frozenset(n for n, ok in _latest_verdicts().items() if ok)
-
-
-def _driver_order(names: list[str]) -> list[str]:
-    green = _driver_green()
-    graded = _graded_names()
-    # red-on-record and never re-greened: the fix MUST earn a verdict
-    red = [n for n in names if n in graded and n not in green]
-    pri = [n for n in _DRIVER_PRIORITY
-           if n in _QUERIES and n not in green and n not in graded]
-    head = set(red) | set(pri)
-    mid = [n for n in names if n not in head and n not in green]
-    # green but rewritten since the verdict: re-grade ahead of the tail
-    regrade = [n for n in _REGRADE_PRIORITY
-               if n in _QUERIES and n in green and n not in head]
-    head |= set(regrade)
-    # green tail rotates OLDEST VERDICT FIRST (r10 verdict task 5b):
-    # window slots the head doesn't use re-sample the stalest greens,
-    # and since a re-grade refreshes the op's round, the cohort
-    # advances by itself every round.
-    rounds = _last_graded_round()
-    pos = {n: i for i, n in enumerate(names)}
-    tail = sorted((n for n in names if n not in head and n in green),
-                  key=lambda n: (rounds.get(n, 0), pos[n]))
-    return red + pri + mid + regrade + tail
-
-
-def _graded_names() -> frozenset[str]:
-    """Every name that has EVER received a driver verdict (green or red)."""
-    return frozenset(_latest_verdicts())
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered operator, in registration order."""
     from manual_data_ingest_spark.plans import catalog  # noqa: F401 — triggers registration
 
-    return {n: _QUERIES[n] for n in _driver_order(list(_QUERIES))}
+    return dict(_QUERIES)
 
 
 def all_oracles() -> dict[str, str]:

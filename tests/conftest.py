@@ -1,12 +1,13 @@
 """Shared pytest fixtures: one engine SparkSession for the whole run.
 
-Small local session (8 threads, 8 shuffle partitions) — unit tests run
-on tiny data where scheduling overhead, not throughput, dominates.
+Local session on ``local[$SPARK_GRAFT_CPUS]`` (``get_spark``'s default;
+all cores when unset) with 8 shuffle partitions — unit tests run on tiny
+data where scheduling overhead, not throughput, dominates. Results must
+not depend on the core count, so the suite takes it from the environment.
 """
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -22,9 +23,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from manual_data_ingest_spark.session import get_spark
 
-    s = get_spark("mdis-tests", master="local[8]")
+    s = get_spark("mdis-tests")
     s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s

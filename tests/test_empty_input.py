@@ -32,8 +32,9 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-#: the ten originally-failing ops + structural-family representatives
-PROBES = [
+#: fast tier: the ten originally-failing ops + structural-family
+#: representatives
+FAST_PROBES = [
     # regression set
     "sink_partitioned", "sink_merge_upsert", "scan_manifest_pruned",
     "pipeline_ingest_register", "sim_ann_ivf_pruned", "win_funnel_steps",
@@ -45,6 +46,12 @@ PROBES = [
     "sim_topk", "text_quality",
     "pipeline_llm_prep", "stream_session", "agg_ks_test",
     "pipeline_bpe_train",
+]
+
+#: slow tier: later additions. This is a strict subset of the
+#: full-registry empty sweep the round gates run (tools/round_gates.sh)
+#: — see pytest.ini.
+SLOW_PROBES = [
     # r3 additions land here the round they are written (r2 verdict #7)
     "graph_connected_components", "ml_naive_bayes", "sim_sparse_tfidf_topk",
     "multimodal_phash_dedup", "agg_ohlc_bars", "agg_user_overlap_jaccard",
@@ -142,14 +149,10 @@ def empty_dir(tmp_path_factory):
     return dst
 
 
-# fast tier keeps the ORIGINAL regression set + family representatives
-# (the first 22 entries); the r3+ additions ride the slow tier, which
-# is a strict subset of the full-registry empty sweep the round gates
-# run (tools/round_gates.sh) — see pytest.ini.
 @pytest.mark.parametrize(
     "name",
-    [p if i < 22 else pytest.param(p, marks=pytest.mark.slow)
-     for i, p in enumerate(PROBES)])
+    FAST_PROBES + [pytest.param(p, marks=pytest.mark.slow)
+                   for p in SLOW_PROBES])
 def test_no_crash_on_empty_tables(spark, empty_dir, name):
     import __spark_entry__ as E
 
@@ -157,17 +160,23 @@ def test_no_crash_on_empty_tables(spark, empty_dir, name):
     assert isinstance(rows, list)  # any row count is fine; crashing is not
 
 
-#: operators that originally crashed the NULL-injection sweep (10% NULLs
-#: in every non-key column): np.stack over None vectors, None media
-#: buffers, NULL map keys, zero-weight groups, collect_list-vs-count(*)
-#: index overruns in the sketches, None manifest stats
-NULL_PROBES = [
+#: fast tier: operators that originally crashed the NULL-injection
+#: sweep (10% NULLs in every non-key column): np.stack over None
+#: vectors, None media buffers, NULL map keys, zero-weight groups,
+#: collect_list-vs-count(*) index overruns in the sketches, None
+#: manifest stats
+FAST_NULL_PROBES = [
     "sim_topk", "sim_threshold_pairs", "sim_quantize_int8",
     "dedup_simhash_wide", "dedup_embedding_ann",
     "multimodal_decode", "multimodal_frame_sample", "multimodal_audio_stub",
     "agg_quantile_sketch_merge", "agg_histogram_sketch_bins",
     "map_ops", "map_transform_filter", "scan_binaryfile",
     "scan_manifest_pruned", "udf_grouped_agg", "ml_pca_power",
+]
+
+#: slow tier: later additions (the full-registry null sweep runs at
+#: round close via tools/round_gates.sh)
+SLOW_NULL_PROBES = [
     # r3 additions: NULL text (phash/tfidf/NB tokenization), NULL
     # event_type/value/ts (overlap, decay, OHLC, freshness)
     "graph_connected_components", "ml_naive_bayes", "sim_sparse_tfidf_topk",
@@ -274,13 +283,10 @@ def nulls_dir(tmp_path_factory):
     return dst
 
 
-# fast tier keeps the original null-crash regression set (first 16);
-# the additions ride the slow tier (full-registry null sweep runs at
-# round close via tools/round_gates.sh).
 @pytest.mark.parametrize(
     "name",
-    [p if i < 16 else pytest.param(p, marks=pytest.mark.slow)
-     for i, p in enumerate(NULL_PROBES)])
+    FAST_NULL_PROBES + [pytest.param(p, marks=pytest.mark.slow)
+                        for p in SLOW_NULL_PROBES])
 def test_no_crash_on_null_cells(spark, nulls_dir, name):
     import __spark_entry__ as E
 

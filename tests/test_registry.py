@@ -1,26 +1,20 @@
-"""Registry ↔ SURVEY.md consistency + grading-order invariants.
+"""Registry ↔ SURVEY.md consistency + registry invariants.
 
 The r2 and r3 verdicts both caught the SURVEY inventory counter stale
 (hand-maintained prose drifting from ``len(all_queries())``); these tests
 make the drift a CI failure instead of a judge finding (r3 verdict item 3).
-The grading-order tests pin the latest-verdict semantics the r3 advisor
-asked for (registry.py `_latest_verdicts`): a later red overrides an
-earlier green so regressions re-enter the head of the driver window.
+They also pin that ``all_queries()`` is registration order, the oracle
+and slow-twin ledgers, and the driver-materialization whitelist.
 
 No SparkSession needed — pure text/dict checks, runs in milliseconds.
 """
 
 from __future__ import annotations
 
-import json
 import re
 
 from manual_data_ingest_spark import registry
-from manual_data_ingest_spark.registry import (
-    _driver_order,
-    all_oracles,
-    all_queries,
-)
+from manual_data_ingest_spark.registry import all_oracles, all_queries
 
 REPO = __file__.rsplit("/tests/", 1)[0]
 
@@ -58,54 +52,10 @@ def test_every_query_has_an_oracle():
     assert missing == set(), f"rows-only operators reappeared: {sorted(missing)}"
 
 
-def test_latest_verdict_overrides_earlier_green(monkeypatch, tmp_path):
-    """green in r01 then red in r02 ⇒ not green, still graded ⇒ heads order."""
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"op_a": {"hash_match": True}, "op_b": {"hash_match": True}})
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"op_a": {"hash_match": False, "err": "boom"}})
-    )
-    import glob as glob_mod
-
-    real_glob = glob_mod.glob
-    monkeypatch.setattr(
-        glob_mod,
-        "glob",
-        lambda pat: (
-            sorted(str(p) for p in tmp_path.glob("CORRECTNESS_r*.json"))
-            if "CORRECTNESS_r*" in pat
-            else real_glob(pat)
-        ),
-    )
-    latest = registry._latest_verdicts()
-    assert latest == {"op_a": False, "op_b": True}
-    assert registry._driver_green() == frozenset({"op_b"})
-    # regression re-enters the head; green rotates to the tail
-    order = _driver_order(["op_b", "op_a", "op_c"])
-    assert order[0] == "op_a" and order[-1] == "op_b"
-
-
-def test_live_grading_window_is_all_never_graded_or_red():
-    """Driver slots must go to new evidence FIRST: no green may occupy a
-    window slot while a never-graded/red op sits outside it. Once the
-    ungraded+red pool is smaller than the 50-slot window (endgame, r8+),
-    greens necessarily pad the tail — assert over min(50, pool) slots
-    instead of all 50 (r8 verdict, What's-wrong #2)."""
-    latest = registry._latest_verdicts()
-    order = list(all_queries())
-    pool = [n for n in order if latest.get(n) is not True]
-    window = order[:min(50, len(pool))]
-    wasted = [n for n in window if latest.get(n) is True]
-    assert wasted == [], f"greens occupying grading slots: {wasted}"
-
-
-def test_greens_all_at_tail():
-    order = list(all_queries())
-    latest = registry._latest_verdicts()
-    flags = [latest.get(n) is True for n in order]
-    first_green = flags.index(True) if True in flags else len(flags)
-    assert all(flags[first_green:]), "a non-green name sorted after a green one"
+def test_all_queries_is_registration_order():
+    """all_queries() is the registry's own insertion order: it reads no
+    file, so every caller sees the same order on every checkout."""
+    assert list(all_queries()) == list(registry._QUERIES)
 
 
 def test_bench_headline_contract():

@@ -1,18 +1,16 @@
 #!/usr/bin/env python
-"""Generate GRADING.md — the driver-verdict coverage ledger.
+"""Rewrite SURVEY.md's inventory-totals line from the live registry.
 
-Machine-generated from CORRECTNESS_r*.json + the live registry order
-(r2 verdict item 6: the never-graded gap list must be generated, not
-prose). Run after any registry change or when a new CORRECTNESS file
-lands:
+Run after any registry change:
 
     python tools/make_grading.py
+
+tests/test_registry.py fails while the totals line and
+``len(all_queries())`` disagree.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 
@@ -21,11 +19,7 @@ sys.path.insert(0, REPO)
 
 
 def rewrite_survey_totals(n_ops: int) -> None:
-    """Rewrite SURVEY.md's inventory-totals line between sentinel markers.
-
-    The r2 AND r3 verdicts both caught the hand-maintained counter stale;
-    this makes it mechanical (r3 verdict item 3a).
-    """
+    """Rewrite SURVEY.md's inventory-totals line between sentinel markers."""
     path = os.path.join(REPO, "SURVEY.md")
     begin = "<!-- TOTALS:BEGIN machine-written by tools/make_grading.py; do not hand-edit -->"
     end = "<!-- TOTALS:END -->"
@@ -41,116 +35,12 @@ def rewrite_survey_totals(n_ops: int) -> None:
         fh.write(text[:i] + block + text[j:])
 
 
-def round_open_snapshot(names: list[str], open_tag: str) -> list[str]:
-    """Record (once) and return the registry name-set at the current round's open.
-
-    The r4 AND r5 verdicts both caught the hand-counted "new this round"
-    prose wrong (18-vs-19, then 24-vs-25); this mechanizes it (r5 verdict
-    item 5). The snapshot for a round is written the FIRST time
-    make_grading.py runs after that round opens (i.e., after the previous
-    round's CORRECTNESS file lands) and is immutable afterwards, so the
-    set-diff `live − snapshot` is exactly the machine count the judge
-    computes from SURVEY rows at the open commit.
-
-    REQUIRED CADENCE (r6 advisor, low): run this tool as the FIRST
-    action after a CORRECTNESS file lands, BEFORE registering any new
-    operator — an op registered before the first run is baked into the
-    open snapshot and silently undercounts. The round-open checklist in
-    the SURVEY round log encodes this order; if the cadence is ever
-    missed, rebuild the snapshot from the registry at the open commit
-    (`git stash` the new ops or `git show <open-sha>` the operator
-    modules) before trusting the count.
-    """
-    path = os.path.join(REPO, "tools", "registry_rounds.json")
-    history: dict[str, list[str]] = {}
-    if os.path.exists(path):
-        history = json.load(open(path))
-    if open_tag not in history:
-        history[open_tag] = sorted(names)
-        with open(path, "w") as fh:
-            json.dump(history, fh, indent=1, sort_keys=True)
-    return history[open_tag]
-
-
 def main() -> None:
-    from manual_data_ingest_spark.registry import (_latest_verdicts,
-                                                   all_queries, slow_twins)
+    from manual_data_ingest_spark.registry import all_queries
 
-    names = list(all_queries())
-    twins = slow_twins()
-    rounds: dict[str, dict[str, dict]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        tag = os.path.basename(path).replace("CORRECTNESS_", "").replace(".json", "")
-        rounds[tag] = json.load(open(path))
-
-    last_graded = max((int(t[1:]) for t in rounds), default=0)
-    open_tag = f"r{last_graded + 1:02d}"
-    snapshot = set(round_open_snapshot(names, open_tag))
-    new_ops = [n for n in names if n not in snapshot]
-
-    # Latest-verdict semantics, shared with the registry's grading order
-    # (r3 advisor, medium): a later red overrides an earlier green.
-    latest = _latest_verdicts()
-    green = {n for n, ok in latest.items() if ok}
-    red_now = {n for n, ok in latest.items() if not ok}
-    first_green: dict[str, str] = {}
-    for tag, verdicts in rounds.items():
-        for n, v in verdicts.items():
-            if isinstance(v, dict) and v.get("hash_match"):
-                first_green.setdefault(n, tag)
-
-    graded = set(latest)
-    never = [n for n in names if n not in graded]
-    window = names[:50]
-
-    lines = [
-        "# GRADING — driver-verdict coverage ledger",
-        "",
-        "MACHINE-GENERATED by `tools/make_grading.py` from "
-        "`CORRECTNESS_r*.json` + the live registry order. Do not hand-edit.",
-        "",
-        f"- Registered operators: **{len(names)}**",
-        f"- Ever driver-graded: **{len(graded)}**"
-        f" (rounds on disk: {', '.join(rounds) or 'none'})",
-        f"- Driver-green on record: **{len(green)}**",
-        f"- Red without a later green: **{len(red_now)}**"
-        + (f" — {sorted(red_now)}" if red_now else ""),
-        f"- Never driver-graded: **{len(never)}**",
-        f"- New operators this round (live registry vs the {open_tag}-open "
-        f"snapshot in tools/registry_rounds.json): **{len(new_ops)}**"
-        + (f" — {new_ops}" if new_ops else ""),
-        f"- Deliberate slow twins (machine ledger, "
-        f"registry.slow_twins()): **{len(twins)}** — "
-        + ", ".join(f"`{a}`→`{b}`" for a, b in sorted(twins.items())),
-        "",
-        "## Next grading window (first 50 registry entries)",
-        "",
-    ]
-    lines += [f"{i + 1}. `{n}`" + ("  *(re-grade: red on record)*" if n in red_now
-                                   else "") for i, n in enumerate(window)]
-    lines += [
-        "",
-        "## Never driver-graded (the full local oracle sweep is their only evidence)",
-        "",
-    ]
-    queue = [n for n in never if n not in window]
-    lines += [f"- `{n}`" for n in queue]
-    lines += [
-        "",
-        "## Driver-green on record",
-        "",
-        "| operator | first green |",
-        "|---|---|",
-    ]
-    lines += [f"| `{n}` | {first_green[n]} |" for n in sorted(green)]
-    lines.append("")
-
-    out = os.path.join(REPO, "GRADING.md")
-    with open(out, "w") as fh:
-        fh.write("\n".join(lines))
-    rewrite_survey_totals(len(names))
-    print(f"wrote {out} + SURVEY totals: {len(names)} ops, {len(green)} green, "
-          f"{len(never)} never-graded, window={len(window)}")
+    n = len(all_queries())
+    rewrite_survey_totals(n)
+    print(f"wrote SURVEY totals: {n} ops")
 
 
 if __name__ == "__main__":

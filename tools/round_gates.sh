@@ -3,9 +3,12 @@
 #
 # Runs, in order: the static window lint, the full-fleet physical-plan
 # audit, all six full-registry mutation gates, the strict sf0.01
-# oracle sweep, and the vanilla-session sweep (driver conditions — no
-# engine perf configs). Each stage prints its SUMMARY line; exit is
-# nonzero if any stage fails. Budget ~45-60 min on local[32].
+# oracle sweep, the vanilla-session sweep (driver conditions — no
+# engine perf configs) and the pytest slow tier of the two modules no
+# tool sweep covers (multi-executor parity, shuffle-partition
+# invariance). Each stage prints its SUMMARY line; exit is nonzero if
+# any stage fails. Sessions run on local[$SPARK_GRAFT_CPUS], default
+# nproc. Budget ~45-60 min measured on 32 cores; longer on fewer.
 #
 # Usage:  bash tools/round_gates.sh [op ...]   # ops forwarded to every
 #                                              # sweep (default: full)
@@ -29,11 +32,12 @@ echo "== strict oracle sweep (sf0.01)"
 python tests/oracle_check.py "$@" 2>/dev/null | tail -1 || FAIL=1
 
 echo "== vanilla-session sweep"
-python - "$@" <<'EOF' || FAIL=1
+# unquoted heredoc: the shell fills in the master's core count
+python - "$@" <<EOF || FAIL=1
 import sys
 sys.path.insert(0, ".")
 from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[32]")
+spark = (SparkSession.builder.master("local[${SPARK_GRAFT_CPUS:-$(nproc)}]")
          .appName("vanilla-gates").getOrCreate())  # NO engine configs
 from tests.oracle_check import run_all
 only = sys.argv[1:] or None
@@ -43,5 +47,9 @@ print(f"VANILLA SUMMARY: {len(results)-len(bad)}/{len(results)} OK"
       + (f" FAILING: {' '.join(bad)}" if bad else ""))
 sys.exit(1 if bad else 0)
 EOF
+
+echo "== pytest slow tier (multi-executor, partition invariance)"
+python -m pytest tests/test_multi_executor.py tests/test_partition_invariance.py \
+  -q -m slow -p no:cacheprovider 2>/dev/null | tail -1 || FAIL=1
 
 exit $FAIL
