@@ -1,12 +1,17 @@
 #!/usr/bin/env python
-"""Benchmark harness (BASELINE.md protocol), dual-scale since r3.
+"""Benchmark harness (BASELINE.md protocol), dual-scale since r3, and the
+one session-and-timing path every measurement tool shares.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], one warmup + N timed
-runs each, and prints ONE JSON line. Top-level keys keep the exact r1/r2
+    python bench.py [name ...]
+
+Runs the named registry queries (default: the ``HEADLINE`` set) at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture, ``SF_DIR``) on
+local[$SPARK_GRAFT_CPUS], one warmup + N timed runs each, against the
+same queries' DuckDB oracles, prints one progress line per query to
+stderr and ONE JSON line to stdout. Top-level keys keep the exact r1/r2
 shape (cross-round comparability); the r2 verdict's ask — "promote the
 4×-replica protocol to the canonical bench" — lands as a ``scales``
-key: the SAME queries and the SAME DuckDB comparator run on 4× replica
+key: the SAME queries and the SAME DuckDB comparator run on N× replica
 dirs (tests/make_replicas.py: facts replicated with offset keys, dims
 copied once). The ratio falls with data size at fixed plan because
 Spark's per-query local-mode floor is constant while everything that
@@ -19,7 +24,13 @@ headline number for the 100 TB design claim; sf0.1 measures the floor.
      ..., "ratio": ..., "median_ratio": ..., "queries_le_2x": ...}}}
 
 Env knobs: BENCH_RUNS (timed runs/query, default 3), BENCH_SCALES
-(comma list of replica multipliers, default "1,4"; "1" = plain sf dir).
+(comma list of replica multipliers, default "1,4"; "1" = plain sf dir),
+and the three data-size knobs in ``KNOBS``. ``BENCH_SCALES=16 python
+bench.py NAME ...`` is the per-query scale run (16×/64× stress rows).
+
+Tools import the helpers: ``bench_session`` (engine session + KNOBS +
+replica dir), ``time_op`` (warmup, timed noop-sink runs, jobs/stages),
+``duckdb_con`` and ``time_sql`` (the comparator side).
 """
 
 from __future__ import annotations
@@ -39,18 +50,26 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TIMED_RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 SCALES = [int(s) for s in os.environ.get("BENCH_SCALES", "1,4").split(",")]
 
-# size shuffle partitions AND input splits to the benchmark SF
-# (~100 MB at sf0.1): the BASELINE.md protocol's "partitions sized to
-# the target SF" rule — measured 10-30% off the per-query floor
-# (shuffle) and ~35% on scan-bound queries (splits; the fixture tables
-# are single files, so default 128m splits give one scan task)
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-# third data-size knob (session.py): in one JVM, building+broadcasting
-# a >2 MB hash relation loses to an 8-partition shuffle — measured
-# full-bench A/B: total 14.6→13.5 s, wins on every join-bearing
-# headline (q3 0.93→0.64). Explicit broadcast() hints are unaffected.
-os.environ.setdefault("SPARK_GRAFT_AUTO_BROADCAST", "2097152")
+#: bench-local data-size knobs, {session conf: (env override, default)},
+#: sized to sf0.1 ≈ 100 MB (BASELINE.md protocol: "partitions sized to
+#: the target SF"). Shuffle partitions: measured 10-30% off the
+#: per-query floor; split size: ~35% on scan-bound queries (the fixture
+#: tables are single files, so default 128m splits give one scan task);
+#: broadcast: in one JVM, building+broadcasting a >2 MB hash relation
+#: loses to an 8-partition shuffle — measured full-bench A/B: total
+#: 14.6→13.5 s, wins on every join-bearing headline (q3 0.93→0.64).
+#: Explicit broadcast() hints are unaffected.
+KNOBS = {
+    "spark.sql.shuffle.partitions": ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"),
+    "spark.sql.files.maxPartitionBytes":
+        ("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
+    "spark.sql.autoBroadcastJoinThreshold":
+        ("SPARK_GRAFT_AUTO_BROADCAST", "2097152"),
+}
+
+#: fixture tables the DuckDB comparator sees as views
+TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
 
 #: headline queries — one per major operator family (SURVEY.md §2)
 HEADLINE = [
@@ -95,6 +114,11 @@ HEADLINE = [
 TWINS = {"sim_threshold_expr", "dedup_near_jaccard", "dedup_simhash"}
 
 
+def _knob(key: str) -> str:
+    env, default = KNOBS[key]
+    return os.environ.get(env, default)
+
+
 def _sf_from_dir(d: str) -> float:
     name = os.path.basename(d.rstrip("/"))
     try:
@@ -103,15 +127,100 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def _scale_dir(scale: int) -> str:
-    """Fixture dir for a replica multiplier (1 = the plain sf dir)."""
+def use_scale(spark, scale: int) -> str:
+    """Point ``spark`` at replica multiplier ``scale``: shuffle
+    partitions track DATA SIZE (base × scale, runtime-settable, so one
+    session serves every scale). Returns the fixture dir, building the
+    replica dir once (1 = the plain sf dir). The dir name carries the
+    source's basename, so replicas of different sources never collide."""
+    base = int(_knob("spark.sql.shuffle.partitions"))
+    spark.conf.set("spark.sql.shuffle.partitions", str(base * scale))
     if scale == 1:
         return SF_DIR
-    out = f"/tmp/mdis_bench_{scale}x"
+    src = os.path.basename(SF_DIR.rstrip("/"))
+    out = f"/tmp/mdis_bench_{src}_{scale}x"
     from tests.make_replicas import build  # idempotent (_COMPLETE marker)
 
     build(scale, SF_DIR, out)
     return out
+
+
+def bench_session(app: str, scale: int = 1):
+    """The engine session with the bench KNOBS applied (env wins), sized
+    for ``scale``. Returns ``(spark, sf_dir)``."""
+    from manual_data_ingest_spark.session import get_spark
+
+    spark = get_spark(app)
+    for key in KNOBS:
+        spark.conf.set(key, _knob(key))
+    return spark, use_scale(spark, scale)
+
+
+def timed(fn) -> float:
+    """Seconds one call of ``fn()`` takes."""
+    t0 = time.perf_counter()
+    fn()
+    return round(time.perf_counter() - t0, 4)
+
+
+def median_time(fn, runs: int) -> float:
+    """Median seconds of ``runs`` calls of ``fn()`` after one warmup."""
+    timed(fn)
+    return round(statistics.median(timed(fn) for _ in range(runs)), 4)
+
+
+def time_op(spark, fn, sf_dir: str, runs: int = TIMED_RUNS,
+            label: str | None = None) -> dict:
+    """Time registry query ``fn(spark, sf_dir)`` into the noop sink.
+
+    The warmup run also builds every session-cached artifact (table
+    plans, the LSH/IVF index checkpoints), so timed runs measure the
+    query, not index builds. Job/stage counts come from the status
+    tracker around the first timed run (r11 verdict task 1: a
+    floor-bound query's cost is ~N stages × the per-stage scheduling
+    constant, so the counts ship with the times); the tracker is read
+    outside the timed calls. ``label`` becomes the jobs' description.
+    Returns ``{"median", "runs", "warmup", "jobs", "stages"}``; session
+    confs are left as found."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run() -> None:
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+
+    sc.setJobDescription(label)
+    try:
+        warmup = timed(run)
+        before = set(tracker.getJobIdsForGroup(None))
+        times = [timed(run)]
+        jobs = [j for j in tracker.getJobIdsForGroup(None) if j not in before]
+        times += [timed(run) for _ in range(runs - 1)]
+    finally:
+        sc.setJobDescription(None)
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    return {"median": round(statistics.median(times), 4), "runs": times,
+            "warmup": warmup, "jobs": len(jobs),
+            "stages": sum(len(i.stageIds) for i in infos if i)}
+
+
+def duckdb_con(sf_dir: str):
+    """DuckDB connection with one view per fixture table in ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"PRAGMA threads={os.cpu_count()}")
+    for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        if os.path.isdir(path):  # replica fixtures are part-file dirs
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
+                    f"read_parquet('{path}')")
+    return con
+
+
+def time_sql(con, sql: str, runs: int = TIMED_RUNS) -> float:
+    """Median seconds of ``sql`` on ``con`` after one warmup."""
+    return median_time(lambda: con.execute(sql).fetchall(), runs)
 
 
 def measure_floor(spark) -> float:
@@ -126,119 +235,48 @@ def measure_floor(spark) -> float:
     from pyspark.sql import functions as F
     from manual_data_ingest_spark.io import load_table
 
-    region = load_table(spark, SF_DIR, "region")
+    def probe(spark, sf_dir):
+        return (load_table(spark, sf_dir, "region").groupBy("r_regionkey")
+                .agg(F.count("*").alias("n")))
 
-    def run() -> float:
-        t0 = time.perf_counter()
-        (region.groupBy("r_regionkey").agg(F.count("*").alias("n"))
-         .write.mode("overwrite").format("noop").save())
-        return time.perf_counter() - t0
-
-    run()
-    return round(statistics.median(run() for _ in range(5)), 4)
+    return time_op(spark, probe, SF_DIR, runs=5)["median"]
 
 
-def bench_spark(spark, sf_dir: str) -> tuple[dict[str, float],
-                                             dict[str, dict[str, int]]]:
-    """Per-query median wall time plus job/stage counts (r11 verdict
-    task 1: a floor-bound query is provably floor-bound when its cost
-    is ~N stages × the per-stage scheduling constant, so the counts
-    ship with the times). Counts come from the status tracker around
-    one timed run; the warmup run before timing also builds every
-    session-cached artifact (table plans, the LSH/IVF index
-    checkpoints), so timed runs measure the query, not index builds."""
+def _median_ratio(values) -> float | None:
+    values = list(values)
+    return round(statistics.median(values), 2) if values else None
+
+
+def bench_scale(spark, scale: int, names: list[str]) -> dict:
     import __spark_entry__ as E
 
-    qs = E.queries()
-    times: dict[str, float] = {}
-    counts: dict[str, dict[str, int]] = {}
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
-    for name in HEADLINE:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-
-        def run() -> float:
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            if df.isStreaming:  # pragma: no cover — streaming ops return batch
-                df.count()
-            else:
-                df.write.mode("overwrite").format("noop").save()
-            return time.perf_counter() - t0
-
-        run()  # warmup (also populates session caches — see docstring)
-        before = set(tracker.getJobIdsForGroup(None))
-        first = run()
-        new_jobs = [j for j in tracker.getJobIdsForGroup(None)
-                    if j not in before]
-        n_stages = 0
-        for j in new_jobs:
-            info = tracker.getJobInfo(j)
-            if info.isDefined():
-                n_stages += len(info.get().stageIds())
-        counts[name] = {"jobs": len(new_jobs), "stages": n_stages}
-        rest = [run() for _ in range(TIMED_RUNS - 1)]
-        times[name] = round(statistics.median([first] + rest), 4)
-        spark.sparkContext.setJobDescription(None)
-    return times, counts
-
-
-def bench_duckdb(sf_dir: str) -> dict[str, float]:
-    import duckdb
-    import __spark_entry__ as E
-
-    oracles = E.oracle_sql()
-    con = duckdb.connect()
-    con.execute(f"PRAGMA threads={os.cpu_count()}")
-    for name in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(path):  # replica fixtures are part-file dirs
-            path += "/*.parquet"
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{path}')")
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in oracles:
-            continue
-
-        def run() -> float:
-            t0 = time.perf_counter()
-            con.execute(oracles[name]).fetchall()
-            return time.perf_counter() - t0
-
-        run()  # warmup
-        times[name] = round(statistics.median(run() for _ in range(TIMED_RUNS)), 4)
+    sf_dir = use_scale(spark, scale)
+    qs, oracles = E.queries(), E.oracle_sql()
+    spark_times: dict[str, float] = {}
+    job_counts: dict[str, dict[str, int]] = {}
+    for name in names:
+        rec = time_op(spark, qs[name], sf_dir, label=f"bench:{name}")
+        spark_times[name] = rec["median"]
+        job_counts[name] = {"jobs": rec["jobs"], "stages": rec["stages"]}
+    con = duckdb_con(sf_dir)
+    duck_times = {n: time_sql(con, oracles[n]) for n in names if n in oracles}
     con.close()
-    return times
-
-
-def _ratios(spark_times: dict[str, float],
-            duck_times: dict[str, float]) -> dict[str, float]:
-    return {k: round(spark_times[k] / duck_times[k], 2)
-            for k in spark_times if k in duck_times and duck_times[k] > 0}
-
-
-def bench_scale(spark, scale: int) -> dict:
-    sf_dir = _scale_dir(scale)
-    # shuffle partitions track DATA SIZE (BASELINE.md protocol): 8 at
-    # sf0.1, scaled with the replica multiplier — runtime-settable, so
-    # one session serves every scale.
-    base = int(os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
-    spark.conf.set("spark.sql.shuffle.partitions", str(base * scale))
-    spark_times, job_counts = bench_spark(spark, sf_dir)
-    duck_times = bench_duckdb(sf_dir)
-    ratio = _ratios(spark_times, duck_times)
-    default_ratios = [v for k, v in ratio.items() if k not in TWINS]
+    ratio = {k: round(spark_times[k] / duck_times[k], 2)
+             for k in spark_times if duck_times.get(k, 0) > 0}
+    for name in names:
+        print(f"{scale}x {name:28s} spark={spark_times[name]:7.3f} "
+              f"duck={duck_times.get(name, float('nan')):7.3f} "
+              f"ratio={ratio.get(name)} {job_counts[name]}",
+              file=sys.stderr, flush=True)
     return {
         "dir": sf_dir,
         "queries": spark_times,
         "job_counts": job_counts,
         "duckdb": duck_times,
         "ratio": ratio,
-        "median_ratio": round(statistics.median(ratio.values()), 2),
-        "median_ratio_default_paths": round(
-            statistics.median(default_ratios), 2),
+        "median_ratio": _median_ratio(ratio.values()),
+        "median_ratio_default_paths": _median_ratio(
+            v for k, v in ratio.items() if k not in TWINS),
         "value": round(sum(spark_times.values()), 4),
         "value_default_paths": round(
             sum(v for k, v in spark_times.items() if k not in TWINS), 4),
@@ -247,24 +285,19 @@ def bench_scale(spark, scale: int) -> dict:
     }
 
 
-def main() -> None:
-    from manual_data_ingest_spark.session import get_spark
-
-    spark = get_spark("mdis-bench")
-    per_scale = {f"{s}x": bench_scale(spark, s) for s in SCALES}
-    # Reset shuffle partitions to the 1x base before probing the floor
-    # (r3 advisor): the scale loop leaves base*last_scale set, and the
-    # floor is subtracted from 1x numbers — it must pair with their
-    # partition config for cross-round comparability.
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
+def main(names: list[str]) -> None:
+    spark, _ = bench_session("mdis-bench")
+    per_scale = {f"{s}x": bench_scale(spark, s, names) for s in SCALES}
+    # Back to the 1x partition base before probing the floor (r3
+    # advisor): the floor is subtracted from 1x numbers — it must pair
+    # with their partition config for cross-round comparability.
+    use_scale(spark, 1)
     floor = measure_floor(spark)
 
     base = per_scale.get("1x") or per_scale[f"{SCALES[0]}x"]
     ratio_above_floor = {
         k: round(max(base["queries"][k] - floor, 0.0001) / base["duckdb"][k], 2)
-        for k in base["queries"]
-        if k in base["duckdb"] and base["duckdb"][k] > 0}
+        for k in base["ratio"]}
     out = {
         "metric": "headline query wall time, Spark local vs DuckDB comparator",
         "value": base["value"],
@@ -285,4 +318,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:] or HEADLINE)

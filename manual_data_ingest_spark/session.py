@@ -29,22 +29,9 @@ ENGINE_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # AQE SMJ→shuffled-hash-join rewrite threshold (guide §3.1: default
-    # 0 = never). Unlike preferSortMergeJoin=false this acts on OBSERVED
-    # post-shuffle partition sizes, not planner estimates, so the OOM
-    # risk the SMJ default guards against is bounded by construction,
-    # and skew-join splitting still applies to the converted join. This
-    # is a DATA-REGIME knob, measured both ways in one warm session
-    # (interleaved A/B, median of 5, r12): at 4× sf0.1 (partitions big
-    # enough that the skipped sort matters) 64m wins −2…−17% on every
-    # join query (join_inner_equi −17%, ingest_upsert_latest −15%,
-    # provenance_chain −9%); at 1× sf0.1 (KB-sized partitions, sort is
-    # free, hash-map build is pure overhead) the SAME setting loses
-    # +2…+13%. Default stays Spark's 0 so the graded small-SF bench is
-    # not detuned; a production deployment sets ≥ the 64 MB advisory
-    # partition size (must be >= advisoryPartitionSizeInBytes to fire).
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold":
-        os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "0"),
+    # maxShuffledHashJoinLocalMapThreshold is left to the session owner:
+    # it is a data-regime knob (SCALE.md: wins at 4× sf0.1, loses at 1×)
+    # that a production deployment sets ≥ its advisory partition size.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -76,9 +76,17 @@ def build(n: int, src: str, out: str) -> None:
     # load_table caches analyzed plans per (sf_dir, table), so an
     # in-place regeneration inside a live session would serve stale
     # file listings (io.clear_table_cache documents the contract).
-    # Delete the dir (or the marker) to force a rebuild.
+    # A dir completed for another multiplier or source is an error, not
+    # a silent reuse. Delete the dir (or the marker) to force a rebuild.
+    src = os.path.abspath(src)
+    want = f"replicas={n} src={src}"
     marker = os.path.join(out, "_COMPLETE")
     if os.path.exists(marker):
+        with open(marker) as fh:
+            got = fh.read().strip()
+        if got != want:
+            raise ValueError(f"{out} holds {got!r}, not {want!r}; "
+                             f"use another dir or rm -r {out}")
         print(f"{out}: already built, skipping (rm {marker} to rebuild)",
               file=sys.stderr)
         return
@@ -100,7 +108,7 @@ def build(n: int, src: str, out: str) -> None:
             pq.write_table(rep, f"{d}/part-{i:03d}.parquet")
         print(f"{t}: {n} replicas, {tbl.num_rows * n} rows", file=sys.stderr)
     with open(marker, "w") as fh:
-        fh.write(f"replicas={n} src={src}\n")
+        fh.write(want + "\n")
 
 
 if __name__ == "__main__":

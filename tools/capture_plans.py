@@ -3,8 +3,9 @@
 
 Usage: python3 tools/capture_plans.py <suffix> [name ...]
 Writes plans/<round>/<query>_<suffix>.txt (round from $PLANS_ROUND, default r13) for each query (default: the
-bench.py HEADLINE set). Judge-facing evidence for OPTIMIZATION_r12.md —
-plan text only, no timing, so it can run beside other work.
+bench.py HEADLINE set) under the bench session config. Judge-facing
+evidence for OPTIMIZATION_r12.md — plan text only, no timing, so it can
+run beside other work.
 """
 from __future__ import annotations
 
@@ -16,29 +17,21 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-os.environ.setdefault("SPARK_GRAFT_AUTO_BROADCAST", "2097152")
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import HEADLINE, bench_session  # noqa: E402
 
 
 def main() -> None:
     suffix = sys.argv[1]
-    names = sys.argv[2:]
+    names = sys.argv[2:] or HEADLINE
 
-    from manual_data_ingest_spark.session import get_spark
-    import bench
     import __spark_entry__ as E
 
-    if not names:
-        names = list(bench.HEADLINE)
-    spark = get_spark("mdis-plan-capture")
+    spark, sf_dir = bench_session("mdis-plan-capture")
     qs = E.queries()
     out_dir = Path(_REPO) / "plans" / os.environ.get("PLANS_ROUND", "r13")
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
-        df = qs[name](spark, SF_DIR)
+        df = qs[name](spark, sf_dir)
         if df.isStreaming:
             text = ("(streaming plan — explain of the logical streaming "
                     "DataFrame)\n" + df._jdf.queryExecution().toString())

@@ -5,81 +5,56 @@ analysis), scheduling floor (jobs x empty-job latency at the same
 shuffle-partition count), and residual compute. Prints one row per
 query plus the measured floor constants.
 
-Protocol matches bench.py (warm session, engine configs, sf0.1,
-median of 3) so rows are comparable to the canonical bench.
+Usage: python tools/floor.py name [name ...]
+
+Session and timing come from bench.py (bench_session, time_op: bench
+knobs, noop sink, warmup + median of 3), so rows are comparable to the
+canonical bench.
 """
 from __future__ import annotations
 
-import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _median_run(fn, n=3):
-    ts = []
-    for _ in range(n):
-        t = time.time()
-        fn()
-        ts.append(time.time() - t)
-    return statistics.median(ts)
+from bench import bench_session, median_time, time_op  # noqa: E402
 
 
 def main() -> None:
-    from manual_data_ingest_spark.session import get_spark
     import __spark_entry__ as E
     from pyspark.sql import functions as F
 
-    spark = get_spark("mdis-floor")
-    sc = spark.sparkContext
+    spark, sf_dir = bench_session("mdis-floor")
     qs = E.queries()
 
     # ---- floor constants (same session) -------------------------------
     # no-op action: pure py4j + scheduler round trip, zero stages
-    t_noop = _median_run(lambda: spark.sql("SELECT 1").collect(), 5)
+    t_noop = median_time(lambda: spark.sql("SELECT 1").collect(), 5)
     # one-stage job: 32 empty-ish tasks
-    t_1stage = _median_run(
-        lambda: spark.range(32, numPartitions=32).count(), 5)
+    t_1stage = median_time(lambda: spark.range(32, numPartitions=32).count(), 5)
     # two-stage shuffle job at the session's shuffle-partition count
-    def _shuffle():
-        (spark.range(32, numPartitions=32)
-         .groupBy((F.col("id") % 4).alias("k")).count().collect())
-    t_2stage = _median_run(_shuffle, 5)
+    t_2stage = median_time(
+        lambda: (spark.range(32, numPartitions=32)
+                 .groupBy((F.col("id") % 4).alias("k")).count().collect()), 5)
     print(f"FLOOR noop={t_noop:.4f} 1stage={t_1stage:.4f} "
           f"2stage_shuffle={t_2stage:.4f} "
           f"(shuffle.partitions={spark.conf.get('spark.sql.shuffle.partitions')})")
 
     for name in sys.argv[1:]:
         fn = qs[name]
-        fn(spark, SF_DIR).collect()  # warm (file listing, code cache)
-        t_build = _median_run(lambda: fn(spark, SF_DIR), 3)
-
-        tracker = sc.statusTracker()
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        t_total = _median_run(lambda: fn(spark, SF_DIR).collect(), 3)
-        jobs = [j for j in (tracker.getJobIdsForGroup(None) or [])
-                if j not in before]
-        n_stages = 0
-        for j in jobs:
-            ji = tracker.getJobInfo(j)
-            if ji:
-                n_stages += len(ji.stageIds)
-        n_jobs = len(jobs)
-        # 3 timed runs -> per-run job/stage counts
-        jpr = n_jobs / 3.0
-        spr = n_stages / 3.0
-        sched_floor = jpr * t_noop + max(spr - jpr, 0) * (t_2stage - t_1stage)
-        compute = t_total - t_build - sched_floor
-        print(f"{name:28s} total={t_total:.4f} build={t_build:.4f} "
-              f"jobs/run={jpr:.1f} stages/run={spr:.1f} "
-              f"sched_floor~={sched_floor:.4f} residual_compute~={max(compute,0):.4f}")
+        rec = time_op(spark, fn, sf_dir, runs=3, label=f"floor:{name}")
+        t_build = median_time(lambda: fn(spark, sf_dir), 3)
+        jobs, stages = rec["jobs"], rec["stages"]
+        sched_floor = (jobs * t_noop
+                       + max(stages - jobs, 0) * (t_2stage - t_1stage))
+        compute = rec["median"] - t_build - sched_floor
+        print(f"{name:28s} total={rec['median']:.4f} build={t_build:.4f} "
+              f"jobs/run={jobs} stages/run={stages} "
+              f"sched_floor~={sched_floor:.4f} "
+              f"residual_compute~={max(compute, 0):.4f}")
 
 
 if __name__ == "__main__":

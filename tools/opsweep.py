@@ -2,11 +2,12 @@
 """Full-registry per-operator Spark timing sweep (r12 measure-first).
 
 Times EVERY registered operator (not just the 24 headline queries) with
-the bench methodology — noop sink, labeled jobs, cold then warm run —
-at $SPARK_GRAFT_SF_DIR under the bench session config, and appends one
-JSON line per operator to the output file as it goes (partial results
-survive interruption). Ranking the warm column is how the r12 round
-finds slow non-headline shapes the headline bench never sees.
+the bench methodology (bench.time_op: noop sink, labeled jobs, cold then
+warm run) at $SPARK_GRAFT_SF_DIR under the bench session config, and
+appends one JSON line per operator to the output file as it goes
+(partial results survive interruption; operators already in the file
+are skipped). Ranking the warm column is how the r12 round finds slow
+non-headline shapes the headline bench never sees.
 
 Usage: python tools/opsweep.py [--out FILE] [--scale N] [name ...]
 """
@@ -16,7 +17,6 @@ import argparse
 import json
 import os
 import sys
-import time
 import traceback
 from pathlib import Path
 
@@ -24,11 +24,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-os.environ.setdefault("SPARK_GRAFT_AUTO_BROADCAST", "2097152")
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import bench_session, time_op  # noqa: E402
 
 
 def main() -> None:
@@ -38,19 +34,9 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from manual_data_ingest_spark.session import get_spark
     import __spark_entry__ as E
 
-    spark = get_spark("mdis-opsweep")
-    base = int(os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
-    spark.conf.set("spark.sql.shuffle.partitions", str(base * args.scale))
-    if args.scale == 1:
-        sf_dir = SF_DIR
-    else:
-        from tests.make_replicas import build
-        sf_dir = f"/tmp/mdis_bench_{args.scale}x"
-        build(args.scale, SF_DIR, sf_dir)
-
+    spark, sf_dir = bench_session("mdis-opsweep", args.scale)
     qs = E.queries()
     names = args.names or list(qs)
     done = set()
@@ -61,22 +47,15 @@ def main() -> None:
         for i, name in enumerate(names):
             if name in done:
                 continue
-            fn = qs[name]
-            spark.sparkContext.setJobDescription(f"opsweep:{name}")
             rec: dict = {"name": name, "scale": args.scale}
             try:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite") \
-                    .format("noop").save()
-                rec["cold"] = round(time.perf_counter() - t0, 4)
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite") \
-                    .format("noop").save()
-                rec["warm"] = round(time.perf_counter() - t0, 4)
+                r = time_op(spark, qs[name], sf_dir, runs=1,
+                            label=f"opsweep:{name}")
+                rec.update(cold=r["warmup"], warm=r["median"],
+                           jobs=r["jobs"], stages=r["stages"])
             except Exception as exc:
                 rec["error"] = f"{type(exc).__name__}: {exc}"
                 traceback.print_exc(file=sys.stderr)
-            spark.sparkContext.setJobDescription(None)
             out.write(json.dumps(rec) + "\n")
             out.flush()
             print(f"[{i + 1}/{len(names)}] {name}: "
