@@ -245,7 +245,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle island rule: a new session starts only when gap > 30:00.
     # Pinned: tests/test_stream_parity.py::
     # test_session_exact_gap_boundary, and the boundary-tie sweep
-    # (tools/boundary_sweep.py) injects exact-1800 s pairs fleet-wide.
+    # (`tools/sweep.py boundary`) injects exact-1800 s pairs fleet-wide.
     st = read_events_stream(spark, sf_dir)
     agg = (st.groupBy(F.session_window("ts", "30 minutes"), "user_id")
            .agg(F.count("*").alias("n_events"))

@@ -256,31 +256,9 @@ SLOW_NULL_PROBES = [
 @pytest.fixture(scope="module")
 def nulls_dir(tmp_path_factory):
     """Every non-key column gets a NULL on every 10th row."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    from tools.sweep import build
 
-    keycols = {"doc_id", "vec_id", "event_id", "o_orderkey", "l_orderkey",
-               "l_linenumber", "c_custkey", "s_suppkey", "p_partkey",
-               "n_nationkey", "r_regionkey", "user_id", "ts"}
-    src = "/root/testdata/sf0.001"
-    dst = str(tmp_path_factory.mktemp("mdis_nulls"))
-    for f in os.listdir(src):
-        if not f.endswith(".parquet"):
-            continue
-        t = pq.read_table(f"{src}/{f}")
-        cols = []
-        for i, cname in enumerate(t.column_names):
-            col = t.column(i)
-            if cname in keycols:
-                cols.append(col)
-                continue
-            n = len(t)
-            mask = pa.array([(j % 10) == 3 for j in range(n)])
-            cols.append(pc.if_else(mask, pa.nulls(n, col.type),
-                                   col.combine_chunks()))
-        pq.write_table(pa.table(cols, names=t.column_names), f"{dst}/{f}")
-    return dst
+    return build("nulls", str(tmp_path_factory.mktemp("mdis_nulls")))
 
 
 @pytest.mark.parametrize(
@@ -349,8 +327,8 @@ def test_text_family_oracle_exact_on_unicode(spark, unicode_dir):
 #: equi-join on a NULL grouping key) — invisible to both the
 #: standard-fixture oracle and the no-crash probe. Extended r7 per the
 #: verdict (21 names at r6; current count = len(NULL_ORACLE_EXACT),
-#: never hand-written — tools/null_sweep.py prints it at run time and
-#: test_no_hand_counted_null_gate_literals pins the class): every
+#: never hand-written — test_no_hand_counted_null_gate_literals pins
+#: the class): every
 #: join_*/ingest_*/win_*/sample_*/
 #: provenance_* op that the full-registry null sweep verified exact,
 #: plus the 20 ops the r7 sweep FIXED (null-text shingle pairing
@@ -360,7 +338,7 @@ def test_text_family_oracle_exact_on_unicode(spark, unicode_dir):
 #: grouping keys in id_mint_scalable / temperature_mix / skew_kurtosis
 #: / percentile_weighted, null sort-order divergence in equidepth /
 #: topk tie-breaks, and the binaryfile zero-byte-file skip). The
-#: full-registry sweep lives in tools/null_sweep.py (round-close
+#: full-registry sweep is `tools/sweep.py nulls` (round-close
 #: gate); this pytest subset is the per-commit regression net.
 NULL_ORACLE_EXACT = [
     "agg_boolean", "agg_gapfill_interp", "agg_histogram_equidepth",
@@ -480,7 +458,7 @@ def test_no_hand_counted_null_gate_literals():
     assert len(NULL_ORACLE_EXACT) == len(set(NULL_ORACLE_EXACT))
     allowed = {21, len(NULL_ORACLE_EXACT)}
     offenders = []
-    for rel in ("tools/null_sweep.py", "tests/test_empty_input.py"):
+    for rel in ("tools/sweep.py", "tests/test_empty_input.py"):
         for i, line in enumerate(open(os.path.join(repo, rel)), 1):
             if "NULL_ORACLE_EXACT" not in line:
                 continue
@@ -490,7 +468,7 @@ def test_no_hand_counted_null_gate_literals():
     assert not offenders, offenders
 
 
-#: ops the ADVERSARIAL-TEXT sweep (tools/adversarial_sweep.py: unicode
+#: ops the ADVERSARIAL-TEXT sweep (`tools/sweep.py adversarial`: unicode
 #: suffixes, empty strings, whitespace-only, embedded quote/comma/
 #: newline/tab/backslash in every string column) found divergent at
 #: its first full run — all fixed late r8, held HASH-EXACT here as the
@@ -520,10 +498,10 @@ ADVERSARIAL_ORACLE_EXACT = [
 def adversarial_dir(tmp_path_factory):
     """The adversarial-text fixture, built by the sweep tool itself so
     the per-commit gate and the close gate can never drift."""
-    from tools.adversarial_sweep import build_fixture
+    from tools.sweep import build
 
-    dst = str(tmp_path_factory.mktemp("mdis_adversarial"))
-    return build_fixture(dst=dst)
+    return build("adversarial",
+                 str(tmp_path_factory.mktemp("mdis_adversarial")))
 
 
 @pytest.mark.slow  # in-suite twin of the tools/ round-gate sweep
@@ -537,7 +515,7 @@ def test_adversarial_text_oracle_exact(spark, adversarial_dir):
     assert not bad, bad
 
 
-#: ops the EXTREME-NUMERICS sweep (tools/numeric_sweep.py: zeros,
+#: ops the EXTREME-NUMERICS sweep (`tools/sweep.py numeric`: zeros,
 #: negated values, large-magnitude values in every numeric non-key
 #: column) found divergent at its first full run — all fixed late r8,
 #: held HASH-EXACT here as the per-commit regression net. The classes:
@@ -556,10 +534,9 @@ NUMERIC_ORACLE_EXACT = [
 
 @pytest.fixture(scope="module")
 def numeric_dir(tmp_path_factory):
-    from tools.numeric_sweep import build_fixture
+    from tools.sweep import build
 
-    dst = str(tmp_path_factory.mktemp("mdis_numeric"))
-    return build_fixture(dst=dst)
+    return build("numeric", str(tmp_path_factory.mktemp("mdis_numeric")))
 
 
 @pytest.mark.slow  # in-suite twin of the tools/ round-gate sweep
@@ -573,7 +550,7 @@ def test_numeric_edge_oracle_exact(spark, numeric_dir):
     assert not bad, bad
 
 
-#: ops the TEMPORAL-EDGE sweep (tools/temporal_sweep.py: pre-epoch
+#: ops the TEMPORAL-EDGE sweep (`tools/sweep.py temporal`: pre-epoch
 #: leap-day, far-future end-of-day, epoch-zero timestamps) found
 #: divergent at its first full run — all fixed late r8, held
 #: HASH-EXACT here as the per-commit net. The classes: DuckDB's
@@ -596,10 +573,9 @@ TEMPORAL_ORACLE_EXACT = [
 
 @pytest.fixture(scope="module")
 def temporal_dir(tmp_path_factory):
-    from tools.temporal_sweep import build_fixture
+    from tools.sweep import build
 
-    dst = str(tmp_path_factory.mktemp("mdis_temporal"))
-    return build_fixture(dst=dst)
+    return build("temporal", str(tmp_path_factory.mktemp("mdis_temporal")))
 
 
 @pytest.mark.slow  # in-suite twin of the tools/ round-gate sweep
@@ -614,7 +590,7 @@ def test_temporal_edge_oracle_exact(spark, temporal_dir):
 
 
 #: Interval-parameterized operators held hash-exact on the BOUNDARY-TIE
-#: fixture (tools/boundary_sweep.py: per-user event gaps landing
+#: fixture (`tools/sweep.py boundary`: per-user event gaps landing
 #: exactly on every declared tolerance/gap/band, supplier balances
 #: exactly at the band-join edge). The r8 stream_session bug class —
 #: Spark's session_window MERGES at exactly gap-distance where the
@@ -635,10 +611,9 @@ BOUNDARY_ORACLE_EXACT = [
 
 @pytest.fixture(scope="module")
 def boundary_dir(tmp_path_factory):
-    from tools.boundary_sweep import build_fixture
+    from tools.sweep import build
 
-    dst = str(tmp_path_factory.mktemp("mdis_boundary"))
-    return build_fixture(dst=dst)
+    return build("boundary", str(tmp_path_factory.mktemp("mdis_boundary")))
 
 
 @pytest.mark.slow  # in-suite twin of the tools/ round-gate sweep
@@ -652,7 +627,7 @@ def test_boundary_tie_oracle_exact(spark, boundary_dir):
     assert not bad, bad
 
 
-#: ops the KEY-SKEW sweep (tools/skew_sweep.py: hot user/customer/
+#: ops the KEY-SKEW sweep (`tools/sweep.py skew`: hot user/customer/
 #: supplier/nation keys, template mega-dup text clusters, a hot
 #: embedding vector) found divergent at its first full run — both
 #: fixed same-session (PARITY #58) — plus the hot-key / mega-cluster
@@ -671,10 +646,9 @@ SKEW_ORACLE_EXACT = [
 
 @pytest.fixture(scope="module")
 def skew_dir(tmp_path_factory):
-    from tools.skew_sweep import build_fixture
+    from tools.sweep import build
 
-    dst = str(tmp_path_factory.mktemp("mdis_skew"))
-    return build_fixture(dst=dst)
+    return build("skew", str(tmp_path_factory.mktemp("mdis_skew")))
 
 
 @pytest.mark.slow  # in-suite twin of the tools/ round-gate sweep
