@@ -83,14 +83,11 @@ HEADLINE = [
     "ingest_validate",      # multi-rule union
     "ingest_upsert_latest", # latest-wins upsert
     "dedup_exact",          # hash dedup (self-union)
-    "dedup_near_jaccard",   # shingle posting lists, UNCAPPED (twin)
-    "dedup_near_jaccard_capped",  # production path: posting-frequency cap
-    "dedup_simhash",        # 32-bit simhash, 2^8 buckets (twin)
-    "dedup_simhash_wide",   # production path: 60-bit fp, 2^15 buckets
+    "dedup_near_jaccard_capped",  # shingle postings, posting-frequency cap
+    "dedup_simhash_wide",   # 60-bit simhash fp, 2^15 buckets
     "sim_topk",             # broadcast probe brute-force baseline
     "sim_ann_lsh",          # sign-bit LSH bucketed ANN
     "sim_threshold_pairs",  # blocked similarity join, BLAS default (r2 swap)
-    "sim_threshold_expr",   # same result, expression-path comparison twin
     "text_wordcount",       # explode + agg
     "text_fingerprint",     # rolling-hash windows (codegen expr stress)
     "multimodal_decode",    # mapInPandas Arrow binary batches
@@ -98,20 +95,6 @@ HEADLINE = [
     "stream_session",       # streaming session windows
     "pipeline_llm_prep",    # end-to-end dedup+quality+lang manifest
 ]
-
-#: deliberately-kept strategy-comparison twins: NOT the engine's
-#: default answer for their task (each is the measured "what the naive
-#: strategy costs" record beside its registered production sibling:
-#: sim_threshold_expr vs sim_threshold_pairs' BLAS blocks,
-#: dedup_near_jaccard's uncapped postings vs _capped / minhash,
-#: dedup_simhash's 2^8 saturating buckets vs _wide's 2^15). Since r4
-#: the production siblings are IN the headline set, so every family
-#: still contributes to the default-paths median — the twin exclusion
-#: stops charging the engine's score for queries whose docstrings say
-#: "do not run this shape at scale". The headline total/median keep
-#: the full set (twins included) for cross-round comparability; the
-#: *_default keys show the engine's actual strategy performance.
-TWINS = {"sim_threshold_expr", "dedup_near_jaccard", "dedup_simhash"}
 
 
 def _knob(key: str) -> str:
@@ -275,11 +258,7 @@ def bench_scale(spark, scale: int, names: list[str]) -> dict:
         "duckdb": duck_times,
         "ratio": ratio,
         "median_ratio": _median_ratio(ratio.values()),
-        "median_ratio_default_paths": _median_ratio(
-            v for k, v in ratio.items() if k not in TWINS),
         "value": round(sum(spark_times.values()), 4),
-        "value_default_paths": round(
-            sum(v for k, v in spark_times.items() if k not in TWINS), 4),
         "queries_le_2x": sum(1 for v in ratio.values() if v <= 2.0),
         "spark_wins": sum(1 for v in ratio.values() if v < 1.0),
     }
@@ -310,8 +289,6 @@ def main(names: list[str]) -> None:
         "spark_query_floor_sec": floor,
         "ratio_above_floor": ratio_above_floor,
         "median_ratio": base["median_ratio"],
-        "median_ratio_default_paths": base["median_ratio_default_paths"],
-        "value_default_paths": base["value_default_paths"],
         "scales": {k: v for k, v in per_scale.items() if k != "1x"},
     }
     print(json.dumps(out))

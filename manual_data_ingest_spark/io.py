@@ -84,6 +84,27 @@ def clear_table_cache(spark: SparkSession, sf_dir: str | None = None) -> None:
                 del idx[key]
 
 
+def _eager_node(plan) -> str | None:
+    """Class name of the first node in a JVM physical plan that would run
+    query stages when the plan is executed (an AQE root, an exchange or a
+    query stage), else None. Walks children and subquery plans by node
+    class, never by plan text, so a path or column named ``Exchange...``
+    is not a hit. A cached relation's scan is a leaf here: reading the
+    cache does not re-run the plan that filled it."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if (cls == "AdaptiveSparkPlanExec" or "Exchange" in cls
+                or cls.endswith("QueryStageExec")):
+            return cls
+        if cls == "InMemoryTableScanExec":
+            continue
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return None
+
+
 def fan_out(df: DataFrame) -> DataFrame:
     """Repartition an under-parallel scan before CPU-heavy row expansion
     (guide §2.5 "one huge unsplittable file" remedy, r12 optimization).
@@ -118,12 +139,12 @@ def fan_out(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     slots = spark.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().executedPlan()
-    desc = plan.toString()
-    if "Exchange" in desc or "ShuffleQueryStage" in desc:
+    bad = _eager_node(plan)
+    if bad is not None:
         raise ValueError(
-            "fan_out() caller contract violated: probed plan contains an "
-            "Exchange/ShuffleQueryStage — probing it would eagerly execute "
-            "query stages. Pass a scan-shaped plan (load + filter/project).")
+            f"fan_out() caller contract violated: probed plan contains "
+            f"{bad} — probing it would eagerly execute query stages. "
+            "Pass a scan-shaped plan (load + filter/project).")
     n = plan.execute().getNumPartitions()
     if n * 2 >= slots:
         return df

@@ -1291,7 +1291,7 @@ SELECT bucket,
        {sql_rnd('min(o_totalprice)')} AS lo,
        {sql_rnd('max(o_totalprice)')} AS hi
 FROM t GROUP BY bucket
-""", twin_of="agg_histogram_sketch_bins")
+""")
 def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-DEPTH histogram (10 buckets of equal row count) — the
     histogram cost-based optimizers and skew diagnostics actually use,
@@ -3078,7 +3078,7 @@ SELECT flag AS l_returnflag, n,
                           ' * (n::DOUBLE * syy - sy::DOUBLE * sy))', 6)}
        END AS spearman_rho
 FROM s
-""", twin_of="agg_spearman_grid")
+""")
 def agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (quantity vs price per returnflag) —
     the monotone-association twin of `agg_corr_covar`'s Pearson r:

@@ -121,7 +121,7 @@ FROM pairs
 JOIN sizes sa ON id_a = sa.doc_id
 JOIN sizes sb ON id_b = sb.doc_id
 WHERE common::DOUBLE / (sa.n + sb.n - common) >= 0.5
-""", twin_of="dedup_near_minhash")
+""")
 def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram (5-token shingle) Jaccard near-dup pairs ≥ 0.5 — the
     deterministic companion that verifies the MinHash candidates.
@@ -229,7 +229,7 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        bit_count(xor(a.fp, b.fp)) AS hamming
 FROM fps a JOIN fps b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.fp, b.fp)) <= {_SH_HAMMING}
-""", twin_of="dedup_simhash_wide")
+""")
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (weighted 32-bit, hamming <= 2).
 
@@ -374,7 +374,7 @@ drops AS (
 )
 SELECT vec_id, label FROM embeddings
 WHERE vec_id NOT IN (SELECT dropped FROM drops)
-""", twin_of="dedup_embedding_ann")
+""")
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup removal: survivors after dropping the
     higher ``vec_id`` of every intra-label pair with cosine >= 0.35.
@@ -689,7 +689,7 @@ SELECT d.doc_id, d.source,
        (h.doc_id IS NULL) AS keep
 FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
 WHERE d.doc_id % 20 <> 0
-""", twin_of="dedup_decontaminate_shuffled")
+""")
 def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag every training document that
     shares at least one 8-token n-gram with the held-out eval set
@@ -1155,7 +1155,7 @@ SELECT probe_id, neighbor_id, hamming, rn FROM (
     FROM (SELECT * FROM fps WHERE doc_id % 100 = 0 AND doc_id < 5000) a
     JOIN fps b ON b.doc_id <> a.doc_id
 ) WHERE rn <= 3
-""", twin_of="sim_hamming_topk_blocked")
+""")
 def sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-signature retrieval: top-3 nearest documents per probe by
     HAMMING distance over the 60-bit SimHash fingerprint — the

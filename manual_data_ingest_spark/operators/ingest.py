@@ -45,41 +45,6 @@ def ingest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("measured_chars"))
 
 
-@register("ingest_id_mint", """
-SELECT doc_id,
-       'MDI-' || upper(substring(sha256(
-           coalesce(source, '') || '|' || doc_id::VARCHAR), 1, 12))
-           AS minted_id,
-       row_number() OVER (ORDER BY source NULLS FIRST, doc_id)
-           AS surrogate_id
-FROM documents
-""", twin_of="ingest_id_mint_scalable")
-def ingest_id_mint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # uuid-api minting made deterministic: content-derived ID (sha2 of the
-    # natural key) + surrogate numbering over an explicit total order.
-    # At 100 TB the sha2 path is embarrassingly parallel; the global
-    # row_number is the bottleneck — for real pipelines prefer the sha2 ID
-    # or zipWithIndex-style per-partition offsets; kept here because the
-    # reference's registration flow is sequential by nature.
-    # NULL-source contract, made explicit on both engines (r7 null
-    # sweep): the mint key coalesces NULL source to '' (concat_ws
-    # SKIPS null args, which would make source=NULL collide with a
-    # doc_id-only key shape, while the oracle's || propagated NULL and
-    # minted nothing), and the surrogate order pins NULLS FIRST
-    # (Spark's ASC default; DuckDB defaults NULLS LAST).
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.orderBy(F.asc_nulls_first("source"), "doc_id")
-    return d.select(
-        "doc_id",
-        F.concat(
-            F.lit("MDI-"),
-            F.upper(F.substring(
-                F.sha2(F.concat_ws("|", F.coalesce("source", F.lit("")),
-                                   "doc_id"), 256), 1, 12)))
-        .alias("minted_id"),
-        F.row_number().over(w).alias("surrogate_id"))
-
-
 @register("ingest_id_mint_scalable", """
 SELECT doc_id,
        'MDI-' || upper(substring(sha256(
@@ -90,8 +55,10 @@ SELECT doc_id,
 FROM documents
 """)
 def ingest_id_mint_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB ID mint: same result as ``ingest_id_mint``, computed
-    without a single-partition window.
+    """The ID mint (uuid-api minting made deterministic): a
+    content-derived ID (sha2 of the natural key) plus surrogate
+    numbering over an explicit total order, computed without a
+    single-partition window.
 
     Two-phase distributed ranking: phase 1 ranks within each ``source``
     partition THROUGH `with_exact_partitioned_rank` (r11 — the r10
@@ -103,15 +70,18 @@ def ingest_id_mint_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase 2 adds each source's cumulative row-count offset. Because
     ``source`` is the LEADING sort key, bucket-major order equals
     global order, so ``offset + local_rank == global row_number``
-    exactly — verified by the same oracle as the serial twin. The only
+    exactly — the oracle's global row_number checks it. The only
     single-partition work is the offset scan over the per-source
     counts (one row per bucket, KBs at any corpus size) which is
     broadcast back; the full table never funnels through one task.
     """
     from manual_data_ingest_spark.functions.ranking import (
         with_exact_partitioned_rank)
-    # NULL-source contract matches the serial twin: '' in the mint key,
-    # NULLS FIRST bucket order, and the offsets join back is NULL-SAFE
+    # NULL-source contract, explicit on both engines: '' in the mint
+    # key (concat_ws SKIPS null args, so a bare NULL source would
+    # collide with a doc_id-only key shape), NULLS FIRST bucket order
+    # (Spark's ASC default; DuckDB defaults NULLS LAST), and the
+    # offsets join back is NULL-SAFE
     # (a plain equi-join on source silently DROPPED every null-source
     # document — the ingest_clean_nulls bug class, caught by the r7
     # null sweep; <=> keeps the broadcast-hash shape).
@@ -190,7 +160,7 @@ def ingest_post_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             # NULL source keys as '' on both engines (Python would
             # stringify None as the literal "None"; the oracle's ||
-            # propagated NULL) — same contract as ingest_id_mint.
+            # propagated NULL) — same contract as ingest_id_mint_scalable.
             keys = [
                 hashlib.sha256(
                     f"{'' if pd.isna(s) else s}|{i}".encode()).hexdigest()

@@ -53,7 +53,7 @@ _DIM = 64
 #: it); interpolating the same literal into the oracle SQL and
 #: ``F.expr`` makes that skew structurally impossible (the
 #: ``_SHINGLE_SQL`` / ``_simhash_fp_sql`` pattern from operators/dedup.py).
-#: Consumers: ml_calibration_bins, ml_lift_chart, ml_threshold_sweep,
+#: Consumers: ml_calibration_bins_scalable, ml_lift_chart, ml_threshold_sweep,
 #: ml_isotonic_calibration, ml_auc_roc (pinned by tests/test_registry.py).
 _SCORED_ONLY_SQL = "c_acctbal IS NOT NULL"
 
@@ -66,10 +66,8 @@ def _scored_lab_ranked(spark: SparkSession, sf_dir: str,
     distributed global rank over (c_acctbal [DESC], c_custkey) and the
     broadcast population count ``_n_tot``. Since r9 this is the
     DEFAULT path — the rank comes from functions/ranking.py's
-    bucket+offset primitive (no unpartitioned WindowExec; the serial
-    global-ntile form survives only as the ledgered slow twin
-    `ml_calibration_bins`). Columns: c_custkey, c_acctbal, y,
-    global_rank, _n_tot."""
+    bucket+offset primitive (no unpartitioned WindowExec). Columns:
+    c_custkey, c_acctbal, y, global_rank, _n_tot."""
     from manual_data_ingest_spark.functions.ranking import (
         with_exact_global_rank)
 
@@ -1372,61 +1370,6 @@ def _nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("cand").alias("predicted")))
 
 
-@register("ml_calibration_bins", f"""
-WITH lab AS (
-  SELECT c_custkey, c_acctbal,
-         CASE WHEN EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey = c_custkey
-                             AND o_orderpriority = '1-URGENT')
-              THEN 1 ELSE 0 END AS y
-  FROM customer WHERE {_SCORED_ONLY_SQL}
-), binned AS (
-  SELECT y, ntile(10) OVER (ORDER BY c_acctbal, c_custkey) AS score_decile
-  FROM lab
-)
-SELECT score_decile,
-       count(*) AS n,
-       count(CASE WHEN y = 1 THEN 1 END) AS n_pos,
-       {sql_rnd('count(CASE WHEN y = 1 THEN 1 END)::DOUBLE'
-                ' / count(*)::DOUBLE', 6)} AS pos_rate
-FROM binned GROUP BY score_decile
-""", twin_of="ml_calibration_bins_scalable")
-def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration table for an account-balance propensity score: rank
-    customers into score deciles (acctbal as the monotone score proxy)
-    and report the observed conversion rate (has ≥1 URGENT order — 86% base rate, non-degenerate on these fixtures) per decile
-    — the reliability-diagram input every deployed classifier is
-    audited with.
-
-    Label via EXISTS/semi-flag join on the order keys (no row
-    multiplication from multi-order customers); the decile ntile
-    carries the c_custkey tie-break so boundary rows land identically
-    on both engines (the `agg_rfm_segments` rule). The global ntile
-    single-threads the entity-level rank — fine at dim scale; at 100 TB
-    the swap is approx-quantile cut points broadcast as bin edges, same
-    downstream algebra.
-    """
-    # a NULL score cannot be ranked into a decile (PARITY #40:
-    # opposite null sort orders) — scored entities only, both engines
-    c = load_table(spark, sf_dir, "customer").filter(
-        F.expr(_SCORED_ONLY_SQL))
-    o = (load_table(spark, sf_dir, "orders")
-         .filter(F.col("o_orderpriority") == "1-URGENT")
-         .select("o_custkey").distinct())
-    lab = (c.join(o, c.c_custkey == o.o_custkey, "left")
-           .select("c_custkey", "c_acctbal",
-                   F.when(F.col("o_custkey").isNotNull(), 1).otherwise(0)
-                   .alias("y")))
-    w = Window.orderBy("c_acctbal", "c_custkey")
-    pos = F.count(F.when(F.col("y") == 1, 1))
-    return (lab.withColumn("score_decile", F.ntile(10).over(w))
-            .groupBy("score_decile")
-            .agg(F.count("*").alias("n"),
-                 pos.alias("n_pos"),
-                 rnd(pos.cast("double") / F.count("*").cast("double"), 6)
-                 .alias("pos_rate")))
-
-
 @register("ml_calibration_bins_scalable", f"""
 WITH lab AS (
   SELECT c_custkey, c_acctbal,
@@ -1447,10 +1390,11 @@ SELECT score_decile,
 FROM binned GROUP BY score_decile
 """)
 def ml_calibration_bins_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB calibration table: same contract and same oracle as
-    ``ml_calibration_bins`` (whose global `ntile(10)` single-threads
-    the whole scored population through one WindowExec task), computed
-    with the distributed exact-rank primitive instead
+    """The 100 TB calibration table: score deciles of the scored
+    customers with their observed conversion rate (has ≥1 URGENT
+    order). The oracle's global `ntile(10)` would single-thread the
+    whole scored population through one WindowExec task; this computes
+    it with the distributed exact-rank primitive instead
     (functions/ranking.py): approx-quantile cut points bucket the
     score, each bucket ranks under a PARTITIONED window, cumulative
     bucket offsets restore the exact global rank, and the SQL-standard
@@ -1511,7 +1455,7 @@ FROM gaps
 """)
 def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected + maximum calibration error (r11) — the one-number
-    reliability summary beside `ml_calibration_bins`' full table:
+    reliability summary beside `ml_calibration_bins_scalable`' full table:
     predicted confidence is the min-max-normalized score, binned into
     10 equal-WIDTH confidence bins (the standard ECE construction —
     unlike the bins table's equal-COUNT deciles), and
@@ -1601,7 +1545,7 @@ def ml_lift_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative lift & gains by score decile (decile 1 = highest
     score): "target the top-k deciles, capture what share of converters
     at what lift over random" — the campaign-targeting readout that
-    pairs with `ml_calibration_bins` (calibration says scores are
+    pairs with `ml_calibration_bins_scalable` (calibration says scores are
     honest; lift says they're USEFUL).
 
     Same EXISTS-label + tie-broken ntile stage as the calibration op;
@@ -2871,7 +2815,7 @@ FROM b JOIN iso ON b.d = iso.d
 """)
 def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration of the decile reliability table —
-    the standard step AFTER `ml_calibration_bins`: the raw per-decile
+    the standard step AFTER `ml_calibration_bins_scalable`: the raw per-decile
     conversion rates need not be monotone in the score, and serving a
     non-monotone calibration map lets a HIGHER score imply a LOWER
     probability. Pool-adjacent-violators fixes that; this computes the
@@ -2882,7 +2826,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines evaluate identically (each candidate is one BIGINT/BIGINT
     division; min/max over a set of doubles is order-free).
 
-    Scale: the fact-side work is `ml_calibration_bins`' label join and
+    Scale: the fact-side work is `ml_calibration_bins_scalable`' label join and
     decile rank; everything isotonic happens on the 10-row bin table.
     Monotonicity of iso_prob is pinned in tests/test_new_ops.py —
     that property IS the operator's contract.

@@ -17,7 +17,7 @@ Performance design (measured, not guessed — BENCH history):
   the query). The unrolled form (``dot_unrolled``/``cosine``) remains
   the bit-exact sequential-fold twin used where left-to-right float
   parity with DuckDB's ``list_dot_product`` matters at full precision
-  (``sim_normalize_materialize``'s norms, ``sim_threshold_expr``).
+  (``sim_normalize_materialize``'s norms).
 - DO NOT pre-project normalized vectors: Catalyst's CollapseProject
   inlines the projected expression into every downstream use — 64
   getItems × a 64-term normalization tree = a combinatorial expression
@@ -381,64 +381,13 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rnd(F.col("score_raw"), 6).alias("score"), "rn"))
 
 
-@register("sim_threshold_expr", f"""
-WITH {_E_CTE}
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
-       {sql_rnd(_COS, 6)} AS score
-FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_COS} >= {_SIM_THRESHOLD}
-""", twin_of="sim_threshold_pairs")
-def sim_threshold_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expression-path comparison twin of ``sim_threshold_pairs`` (which
-    is the engine's default, BLAS-blocked answer — r1 named the
-    expression form ``sim_threshold_pairs`` and the BLAS form
-    ``sim_threshold_blas``; r2 swapped the default per the r1 verdict
-    and keeps this twin to record the measured strategy gap, ~5×).
-
-    Label-blocked self-join, per-pair cosine as ~200 codegen'd scalar
-    ops (the unrolled 3-dot form — see module header for why inline
-    norms beat every precompute variant ON THIS PATH). Correct shape
-    (equi-join, no cartesian), wrong constant factor at scale.
-
-    KNOWN, PINNED codegen fallback (the r5 verdict's one unexplained
-    ERROR, root-caused r6): Catalyst pushes the threshold filter into
-    the BroadcastHashJoin condition and re-expands the projected
-    cosine, so bhj_doConsume carries ~2×192 unrolled terms and janino
-    fails with "Code grows beyond 64 KB"; Spark falls back to the
-    interpreted path and the result is unchanged (hash-green). It
-    reproduces in ISOLATION under toPandas() — count() prunes the
-    projection, which is why the r5 isolated-batch probes missed it.
-    The "fix" was measured and REJECTED: pre-projecting per-row
-    squared norms makes the method compile, but a janino method this
-    size exceeds HotSpot's JIT threshold and runs in the BYTECODE
-    interpreter — 82.1 s vs 8.99 s same-session at 4× (BASELINE.md
-    r6); Spark's expression-interpreted fallback, built from small
-    JIT-friendly evaluators, is the faster engine answer. Pinned in
-    tests/test_plans.py::test_threshold_expr_fallback_is_the_known_one;
-    the production-scale answer remains the BLAS twin.
-    """
-    e = load_table(spark, sf_dir, "embeddings")
-    a = e.alias("a")
-    b = e.alias("b")
-    score = cosine("a.embedding", "b.embedding")
-    return (a.join(b, (F.col("a.label") == F.col("b.label"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("id_a"),
-                    F.col("b.vec_id").alias("id_b"),
-                    F.col("a.label").alias("label"),
-                    score.alias("score_raw"))
-            .filter(F.col("score_raw") >= _SIM_THRESHOLD)
-            .select("id_a", "id_b", "label",
-                    rnd(F.col("score_raw"), 6).alias("score")))
-
-
 @register("sim_threshold_pairs", f"""
 WITH {_E_CTE}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
        {sql_rnd(_COS, 6)} AS score
 FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE {_COS} >= {_SIM_THRESHOLD}
-""", twin_of="sim_threshold_pairs_chunked")
+""")
 def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All intra-label pairs with cosine ≥ threshold — the engine's
     DEFAULT strategy, computed the production way: per-block BLAS
@@ -447,8 +396,8 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each label block's vectors become one float64 matrix M, scores =
     M·Mᵀ / outer(norms) in one BLAS call, upper-triangle thresholding
     emits the pairs. Per-pair cost is a few SIMD flops vs ~200
-    codegen'd scalar ops on the expression twin (``sim_threshold_expr``)
-    — measured ~5× here, and the gap widens with block size. Blocking
+    codegen'd scalar ops on a per-pair expression self-join — measured
+    ~5× here (SCALE.md), and the gap widens with block size. Blocking
     keeps the candidate count at Σ per-label n², not corpus n².
 
     Float note: BLAS accumulates pairwise/SIMD, not left-to-right, so
@@ -761,7 +710,7 @@ SELECT src, dst, score, rn FROM (
                               ORDER BY {_COS} DESC, b.vec_id) AS rn
     FROM pop a JOIN pop b ON b.vec_id <> a.vec_id
 ) WHERE rn <= 5
-""", twin_of="sim_knn_graph_blocked")
+""")
 def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric-population kNN graph (k=5, cosine) over the every-5th
     subcorpus: the edge list feeding graph clustering / connected-
@@ -1163,15 +1112,13 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rnd(F.col("score_raw"), 6).alias("score"), "rn"))
 
 
-def _chunk_rows() -> int:
-    """Chunk size for the chunk-pair BLAS decomposition. Default 4096
-    (the BLAS sweet spot — and the grain that kept the 64× run at the
-    plain path's speed; 128 over-fragmented it to 43 s, BASELINE.md);
-    env-tunable because the right value is a memory/parallelism knob,
-    not a semantic one — output is chunking-invariant by construction
-    (pinned in tests/test_new_ops.py at chunk=64)."""
-    import os
-    return int(os.environ.get("SPARK_GRAFT_SIM_CHUNK_ROWS", "4096"))
+#: Chunk size for the chunk-pair BLAS decomposition: the BLAS sweet
+#: spot, and the grain that kept the 64× run at the plain path's speed
+#: (128 over-fragmented it to 43 s, BASELINE.md). A memory/parallelism
+#: knob, not a semantic one — output is chunking-invariant by
+#: construction (pinned in tests/test_new_ops.py at chunk=64). Read on
+#: the driver when the plan is built.
+_CHUNK_ROWS = 4096
 
 
 @register("sim_threshold_pairs_chunked", f"""
@@ -1208,7 +1155,7 @@ def sim_threshold_pairs_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     counts = e.groupBy("label").agg(F.count("*").alias("n"))
     nch = F.greatest(F.lit(1),
-                     F.ceil(F.col("n") / F.lit(_chunk_rows()))).cast("int")
+                     F.ceil(F.col("n") / F.lit(_CHUNK_ROWS))).cast("int")
     ec = (e.join(counts, "label")
           .withColumn("nch", nch)
           .withColumn("my", (F.col("vec_id") % F.col("nch")).cast("int")))

@@ -1170,57 +1170,6 @@ def pipeline_quality_filter_ablation(spark: SparkSession,
                     .alias("pct_docs_kept")))
 
 
-@register("pipeline_curriculum_order", f"""
-WITH q AS (
-    SELECT doc_id,
-           CAST(length(list_distinct(string_split(text, ' '))) AS DOUBLE)
-           / CAST(length(string_split(text, ' ')) AS DOUBLE) AS ttr
-    FROM documents
-), b AS (
-    SELECT doc_id, ttr,
-           ntile(4) OVER (ORDER BY ttr DESC, doc_id) AS bucket
-    FROM q
-)
-SELECT doc_id, bucket, {sql_rnd('ttr', 4)} AS quality,
-       row_number() OVER (PARTITION BY bucket
-                          ORDER BY md5(doc_id::VARCHAR), doc_id)
-           AS seq_in_bucket
-FROM b
-""", twin_of="pipeline_curriculum_order_scalable")
-def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum ordering for LLM training: documents scored by a
-    deterministic quality proxy (type-token ratio — the fixture docs
-    are word-soup, so richer heuristics reduce to this), quartiled
-    into curriculum buckets (bucket 1 = cleanest first), then
-    deterministically SHUFFLED within each bucket by md5(doc_id) —
-    the `sample_epoch_shuffle` move, so a training run consumes
-    quality-ordered phases with no intra-phase ordering bias.
-
-    Scale shape: the epoch order is (bucket, seq_in_bucket) — seq is
-    a PER-BUCKET window, never a global row_number, so no stage ever
-    single-partitions the corpus; the only global step is ntile's
-    sort, which at 100 TB swaps for approx-quantile bucket cuts
-    (`agg_histogram_equidepth`'s sketch) without changing the
-    contract. Ranking keys (exact integer-ratio ttr, md5 hex) are
-    engine-identical, so the order is bit-stable cross-engine.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    q = d.select(
-        "doc_id",
-        (F.size(F.array_distinct(toks)).cast("double")
-         / F.size(toks).cast("double")).alias("ttr"))
-    b = q.withColumn(
-        "bucket", F.ntile(4).over(
-            Window.orderBy(F.col("ttr").desc(), "doc_id")))
-    return b.select(
-        "doc_id", "bucket", rnd(F.col("ttr"), 4).alias("quality"),
-        F.row_number().over(
-            Window.partitionBy("bucket")
-            .orderBy(F.md5(F.col("doc_id").cast("string").cast("binary")),
-                     "doc_id")).alias("seq_in_bucket"))
-
-
 @register("pipeline_curriculum_order_scalable", f"""
 WITH q AS (
     SELECT doc_id,
@@ -1240,17 +1189,23 @@ FROM b
 """)
 def pipeline_curriculum_order_scalable(spark: SparkSession,
                                        sf_dir: str) -> DataFrame:
-    """The 100 TB curriculum order: same contract and same oracle as
-    ``pipeline_curriculum_order``, whose `ntile(4)` funnels every
-    document through one global-sort WindowExec task. Here the
-    quartile comes from the distributed exact-rank primitive
-    (functions/ranking.py): approx-quantile cuts on the quality score
-    bucket the corpus, per-bucket PARTITIONED windows rank locally,
-    cumulative bucket offsets restore the exact global rank, and the
-    SQL tile rule converts rank → quartile — hash-identical to the
-    serial ntile for any cut placement. The intra-phase shuffle
-    (seq_in_bucket) was already a per-bucket window; with the ntile
-    swap no stage single-partitions the corpus."""
+    """Curriculum ordering for LLM training: documents scored by a
+    deterministic quality proxy (type-token ratio — the fixture docs
+    are word-soup, so richer heuristics reduce to this), quartiled
+    into curriculum buckets (bucket 1 = cleanest first), then
+    deterministically SHUFFLED within each bucket by md5(doc_id) —
+    the `sample_epoch_shuffle` move, so a training run consumes
+    quality-ordered phases with no intra-phase ordering bias.
+
+    The oracle's `ntile(4)` would funnel every document through one
+    global-sort WindowExec task. Here the quartile comes from the
+    distributed exact-rank primitive (functions/ranking.py):
+    approx-quantile cuts on the quality score bucket the corpus,
+    per-bucket PARTITIONED windows rank locally, cumulative bucket
+    offsets restore the exact global rank, and the SQL tile rule
+    converts rank → quartile — hash-identical to the serial ntile for
+    any cut placement. The intra-phase shuffle (seq_in_bucket) is a
+    per-bucket window too, so no stage single-partitions the corpus."""
     from manual_data_ingest_spark.functions.ranking import (
         ntile_from_rank, with_exact_global_rank)
 

@@ -25,24 +25,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-_TWIN_OF: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None,
-             twin_of: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def register(name: str,
+             oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; ``oracle`` is the DuckDB SQL twin.
 
     ``oracle=None`` marks a rows-only operator (LSH internals, watermark
     semantics, …) — the driver records a weaker check for those.
-
-    ``twin_of`` marks a DELIBERATE SLOW TWIN: a correct operator kept to
-    record a measured strategy gap, whose production answer at scale is
-    the named scale-safe sibling. The mapping is the machine ledger the
-    r6 verdict asked for (What's-wrong #3: prose said 11 twins, the
-    true count was 12) — ``slow_twins()`` exposes it and
-    tests/test_registry.py pins the set, so documentation can never
-    hand-count it again. Chains are allowed (expression twin → default
-    strategy → chunked scale form) but must terminate at a non-twin.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -51,18 +41,9 @@ def register(name: str, oracle: str | None = None,
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle.strip()
-        if twin_of is not None:
-            _TWIN_OF[name] = twin_of
         return fn
 
     return deco
-
-
-def slow_twins() -> dict[str, str]:
-    """slow-twin name → its scale-safe sibling (machine ledger)."""
-    from manual_data_ingest_spark.plans import catalog  # noqa: F401
-
-    return dict(_TWIN_OF)
 
 
 def all_queries() -> dict[str, QueryFn]:

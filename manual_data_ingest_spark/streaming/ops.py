@@ -287,7 +287,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_id, user_id, event_type, value
 FROM events WHERE {_VALID_TS_SQL}
 QUALIFY row_number() OVER (PARTITION BY event_id ORDER BY ts) = 1
-""", twin_of="stream_dedup_within_watermark")
+""")
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming first-occurrence dedup: two identical streams unioned
     # (so the state store genuinely suppresses duplicates), keyed state

@@ -63,7 +63,7 @@ SLOW_PROBES = [
     "text_top_terms",
     "win_rolling_median", "agg_theil_index", "agg_apdex",
     "sample_balanced_label", "graph_bfs_levels",
-    "sim_knn_graph", "ml_calibration_bins", "dedup_fuzzy_key",
+    "sim_knn_graph", "dedup_fuzzy_key",
     "text_boilerplate_prefix", "sample_negative_pairs",
     "sim_knn_graph_blocked",
     "multimodal_pair_batches", "dedup_survivorship", "win_gap_distribution",
@@ -117,13 +117,13 @@ SLOW_PROBES = [
     "agg_acf_multi_lag", "sim_threshold_pairs_chunked",
     "sim_rrf_fusion", "sim_bm25_topk", "join_bloom_prefilter",
     "ml_two_proportion_ztest", "agg_lorenz_curve",
-    "pipeline_curriculum_order", "sample_neyman_allocation",
+    "sample_neyman_allocation",
     "sim_pq_adc_topk", "graph_hits", "stream_dedup_within_watermark",
     # r7 additions
     "udf_sql_function", "win_holt_linear", "graph_reach_recursive",
     "scan_nested_pruned", "stream_static_enrich", "join_skew_aqe",
     "agg_benford_test", "ml_isotonic_calibration", "ingest_id_gap_islands",
-    "ml_calibration_bins", "ml_lift_chart", "ml_threshold_sweep",
+    "ml_lift_chart", "ml_threshold_sweep",
     "ml_conformal_interval",
     # r8 additions
     "join_runtime_bloom", "scan_agg_pushdown", "agg_exchange_reuse",
@@ -189,7 +189,7 @@ SLOW_NULL_PROBES = [
     "text_top_terms",
     "win_rolling_median", "agg_theil_index", "agg_apdex",
     "sample_balanced_label", "graph_bfs_levels",
-    "sim_knn_graph", "ml_calibration_bins", "dedup_fuzzy_key",
+    "sim_knn_graph", "ml_calibration_bins_scalable", "dedup_fuzzy_key",
     "text_boilerplate_prefix", "sample_negative_pairs",
     "sim_knn_graph_blocked",
     "multimodal_pair_batches", "dedup_survivorship", "win_gap_distribution",
@@ -243,7 +243,7 @@ SLOW_NULL_PROBES = [
     "agg_acf_multi_lag", "sim_threshold_pairs_chunked",
     "sim_rrf_fusion", "sim_bm25_topk", "join_bloom_prefilter",
     "ml_two_proportion_ztest", "agg_lorenz_curve",
-    "pipeline_curriculum_order", "sample_neyman_allocation",
+    "pipeline_curriculum_order_scalable", "sample_neyman_allocation",
     "sim_pq_adc_topk", "graph_hits", "stream_dedup_within_watermark",
     # r7 additions
     "udf_sql_function", "win_holt_linear", "graph_reach_recursive",
@@ -354,7 +354,7 @@ NULL_ORACLE_EXACT = [
     "ingest_cdc_apply", "ingest_checksum_manifest", "ingest_clean_nulls",
     "ingest_double_submit_guard", "ingest_dp_release", "ingest_dq_suite",
     "ingest_file_lineage", "ingest_fk_coverage_report", "ingest_freshness_slo",
-    "ingest_gdpr_erasure", "ingest_id_mint", "ingest_id_mint_scalable",
+    "ingest_gdpr_erasure", "ingest_id_mint_scalable",
     "ingest_incremental_agg", "ingest_k_anonymity", "ingest_late_arriving_dims",
     "ingest_late_data_report", "ingest_manifest", "ingest_manifest_diff",
     "ingest_missing_hours_report", "ingest_mix_shift_chi2", "ingest_partition_skew_report",
@@ -410,7 +410,7 @@ NULL_ORACLE_EXACT = [
     "udf_sql_function", "win_holt_linear", "graph_reach_recursive",
     "scan_nested_pruned", "stream_static_enrich", "join_skew_aqe",
     "agg_benford_test", "ml_isotonic_calibration", "ingest_id_gap_islands",
-    "ml_calibration_bins", "ml_lift_chart", "ml_threshold_sweep",
+    "ml_calibration_bins_scalable", "ml_lift_chart", "ml_threshold_sweep",
     "ml_conformal_interval",
     # r8 second fix batch: the null-sweep residual burned down 10 → 2.
     # decode(NULL) = NULL in the multimodal stubs (was: coerced to b"");

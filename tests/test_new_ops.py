@@ -1,4 +1,4 @@
-"""Targeted tests for the r1 additions: BLAS/expression path equality,
+"""Targeted tests for the r1 additions: BLAS path vs the expression oracle,
 stream-stream join parity, SCD2 interval laws, salted-join equivalence,
 rollup cascade consistency.
 """
@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from tests.conftest import SF_SMALL, SF_ORACLE
+from tests.oracle_check import compare, duckdb_connect
 
 
 def _rows(df):
@@ -16,11 +17,17 @@ def _rows(df):
     return sorted(map(tuple, df.select(*cols).collect()))
 
 
+def _oracle_exact(spark, name: str) -> None:
+    with duckdb_connect(SF_ORACLE) as con:
+        res = compare(name, E.queries()[name](spark, SF_ORACLE), con,
+                      E.oracle_sql()[name])
+    assert res.ok, res
+
+
 def test_blas_equals_expression_path(spark):
-    qs = E.queries()
-    a = _rows(qs["sim_threshold_pairs"](spark, SF_ORACLE))
-    b = _rows(qs["sim_threshold_expr"](spark, SF_ORACLE))
-    assert a == b  # two execution strategies, one result
+    """Per-block BLAS scores equal the oracle's per-pair expression
+    cosine exactly: two execution strategies, one result."""
+    _oracle_exact(spark, "sim_threshold_pairs")
 
 
 def test_scd2_intervals_partition_time(spark):
@@ -159,10 +166,9 @@ def test_approx_distinct_error_bound(spark):
 
 
 def test_scalable_mint_equals_serial_mint(spark):
-    # two-phase bucket ranking must reproduce the global row_number exactly
-    qs = E.queries()
-    assert _rows(qs["ingest_id_mint_scalable"](spark, SF_ORACLE)) == \
-        _rows(qs["ingest_id_mint"](spark, SF_ORACLE))
+    # two-phase bucket ranking must reproduce the oracle's serial global
+    # row_number exactly
+    _oracle_exact(spark, "ingest_id_mint_scalable")
 
 
 def test_post_entities_retry_contract(spark):
@@ -2154,14 +2160,17 @@ def test_chunked_threshold_pairs_equals_blocked(spark, monkeypatch):
     """The chunk-pair decomposition must be row-identical to the
     one-matmul-per-label path — at the default chunk (4096: single
     chunk per fixture label, the degenerate identity) AND with the
-    knob forced to 64 (sf0.1's 200 rows/label = 4 chunks, the
-    multi-chunk path actually exercised)."""
+    chunk forced to 64 (sf0.1's 200 rows/label = 4 chunks, the
+    multi-chunk path actually exercised; the chunk size is read when
+    the plan is built)."""
     qs = E.queries()
     for sf_dir in (SF_ORACLE, "/root/testdata/sf0.1"):
         a = _rows(qs["sim_threshold_pairs"](spark, sf_dir))
         b = _rows(qs["sim_threshold_pairs_chunked"](spark, sf_dir))
         assert a == b, sf_dir
-    monkeypatch.setenv("SPARK_GRAFT_SIM_CHUNK_ROWS", "64")
+    from manual_data_ingest_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_CHUNK_ROWS", 64)
     a = _rows(qs["sim_threshold_pairs"](spark, "/root/testdata/sf0.1"))
     b = _rows(qs["sim_threshold_pairs_chunked"](spark, "/root/testdata/sf0.1"))
     assert a == b
@@ -2225,7 +2234,7 @@ def test_curriculum_buckets_are_quality_ordered(spark):
     """Bucket boundaries must respect the quality ordering: the minimum
     quality in bucket b must be >= the maximum in bucket b+1 (ntile on
     quality desc), and per-bucket seq must be 1..n_b dense."""
-    out = E.queries()["pipeline_curriculum_order"](
+    out = E.queries()["pipeline_curriculum_order_scalable"](
         spark, SF_ORACLE).collect()
     by_bucket: dict = {}
     for r in out:

@@ -21,7 +21,6 @@ BOUNDS = [
     ("flagship_q3", 15),
     ("dedup_near_jaccard", 20),
     ("sim_threshold_pairs", 20),
-    ("sim_threshold_expr", 20),
     ("text_fingerprint", 15),
     ("pipeline_llm_prep", 15),
     ("dedup_simhash", 20),

@@ -86,13 +86,11 @@ def test_udfs_use_arrow_eval(spark):
 
 
 def test_no_cartesian_in_blocked_similarity(spark):
-    # label blocking must make the pair generation an equi-join
-    # (expr twin: the join-based path; the default is BLAS applyInPandas)
-    plan = _plan(spark, "sim_threshold_expr")
-    assert "CartesianProduct" not in plan
-    # and the BLAS default must be the vectorized grouped-map path
+    # label blocking: the BLAS default must be the vectorized
+    # grouped-map path over label blocks, never a cartesian
     plan_blas = _plan(spark, "sim_threshold_pairs")
     assert "FlatMapGroupsInPandas" in plan_blas
+    assert "CartesianProduct" not in plan_blas
 
 
 def test_partition_pruned_readback(spark, tmp_path):
@@ -1084,26 +1082,6 @@ def test_training_mix_decontamination_adaptive_broadcast(spark):
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in final, final
-
-
-def test_threshold_expr_fallback_is_the_known_one(spark):
-    """sim_threshold_expr's janino 64 KB fallback is KNOWN and pinned
-    (r5 verdict item 3): under spark.sql.codegen.fallback=false the
-    compile failure surfaces as an error mentioning the 64 KB method
-    limit — proving the only codegen ERROR in the sweep is this
-    documented one — while under the default config the query runs
-    interpreted and stays hash-green (full oracle sweep). If a Spark
-    upgrade starts splitting join-consume methods, this test fails:
-    delete the pin and the docstring paragraph together."""
-    import pyspark
-    old = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        with pytest.raises(Exception, match="64 KB|64KB|grows beyond"):
-            E.queries()["sim_threshold_expr"](
-                spark, SF_ORACLE).toPandas()
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", old)
 
 
 def test_overlap_minhash_single_scan_no_user_selfjoin(spark):

@@ -146,7 +146,7 @@ def test_id_mint_deterministic_across_runs(spark):
     makes re-registration idempotent (never monotonically_increasing_id)."""
     import __spark_entry__ as E
 
-    q = E.queries()["ingest_id_mint"]
+    q = E.queries()["ingest_id_mint_scalable"]
     a = sorted(map(tuple, q(spark, "/root/testdata/sf0.001").collect()))
     b = sorted(map(tuple, q(spark, "/root/testdata/sf0.001").collect()))
     assert a == b

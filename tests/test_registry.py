@@ -4,7 +4,8 @@ The r2 and r3 verdicts both caught the SURVEY inventory counter stale
 (hand-maintained prose drifting from ``len(all_queries())``); these tests
 make the drift a CI failure instead of a judge finding (r3 verdict item 3).
 They also pin that ``all_queries()`` is registration order, the oracle
-and slow-twin ledgers, and the driver-materialization whitelist.
+ledger, the plan-audit whitelist and the driver-materialization
+whitelist.
 
 No SparkSession needed — pure text/dict checks, runs in milliseconds.
 """
@@ -58,10 +59,20 @@ def test_all_queries_is_registration_order():
     assert list(all_queries()) == list(registry._QUERIES)
 
 
+def test_plan_audit_whitelist_names_registered_ops():
+    """Every plan-audit exemption names a live operator: deleting an op
+    must take its exemption with it."""
+    from tools.plan_audit import WHITELIST
+
+    orphans = set(WHITELIST) - set(all_queries())
+    assert orphans == set(), (
+        f"exemptions for unregistered ops: {sorted(orphans)}")
+
+
 def test_bench_headline_contract():
     """Every benched query must be registered with an oracle (the
-    DuckDB comparator side of bench.py), and every twin exclusion must
-    name a benched query — drift here silently breaks BENCH_r{N}."""
+    DuckDB comparator side of bench.py) — drift here silently breaks
+    BENCH_r{N}."""
     import bench
 
     names = set(all_queries())
@@ -70,46 +81,7 @@ def test_bench_headline_contract():
     assert missing == [], f"HEADLINE not registered: {missing}"
     no_oracle = [q for q in bench.HEADLINE if q not in oracles]
     assert no_oracle == [], f"HEADLINE without oracle: {no_oracle}"
-    assert bench.TWINS <= set(bench.HEADLINE)
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
-
-
-def test_slow_twin_ledger_is_machine_checked():
-    """The deliberate-slow-twin list is a REGISTRY ATTRIBUTE, not prose
-    (r6 verdict, What's-wrong #3: the round log said 11 twins while the
-    true count was 12 — same hand-count defect class the new-op counter
-    fixed). Pins: the exact 14-name set, every scale-safe sibling is a
-    registered non-self operator, twin chains terminate at a non-twin,
-    and bench.py's TWINS exclusion set is a subset of the ledger."""
-    import bench
-    from manual_data_ingest_spark.registry import all_queries, slow_twins
-
-    tw = slow_twins()
-    assert tw == {
-        "sim_threshold_expr": "sim_threshold_pairs",
-        "dedup_near_jaccard": "dedup_near_minhash",
-        "dedup_simhash": "dedup_simhash_wide",
-        "dedup_embedding": "dedup_embedding_ann",
-        "sim_knn_graph": "sim_knn_graph_blocked",
-        "ingest_id_mint": "ingest_id_mint_scalable",
-        "agg_histogram_equidepth": "agg_histogram_sketch_bins",
-        "sim_hamming_topk": "sim_hamming_topk_blocked",
-        "sim_threshold_pairs": "sim_threshold_pairs_chunked",
-        "dedup_decontaminate": "dedup_decontaminate_shuffled",
-        "stream_dedup": "stream_dedup_within_watermark",
-        "agg_spearman": "agg_spearman_grid",
-        "ml_calibration_bins": "ml_calibration_bins_scalable",
-        "pipeline_curriculum_order": "pipeline_curriculum_order_scalable",
-    }
-    qs = set(all_queries())
-    for slow, fast in tw.items():
-        assert fast in qs and fast != slow
-        seen, cur = {slow}, fast
-        while cur in tw:  # chains allowed, cycles and dead ends not
-            assert cur not in seen, f"twin cycle at {cur}"
-            seen.add(cur)
-            cur = tw[cur]
-    assert set(bench.TWINS) <= set(tw)
 
 
 def test_driver_materialization_whitelist():
@@ -181,7 +153,7 @@ def test_calibration_filter_single_sourced():
         "duplicated copy of the scored-entities filter in ml.py — "
         "interpolate _SCORED_ONLY_SQL instead")
     oracles = all_oracles()
-    family = ["ml_calibration_bins", "ml_lift_chart",
+    family = ["ml_calibration_bins_scalable", "ml_lift_chart",
               "ml_threshold_sweep", "ml_isotonic_calibration",
               "ml_auc_roc"]  # r8: AUC joined the ranked-score family
     for name in family:

@@ -49,15 +49,16 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-#: op -> allowed violation kinds. Slow twins (registry.slow_twins())
-#: are ADDITIONALLY allowed single_partition_raw at runtime — their
-#: serial shape is the machine-ledgered point of their existence.
-#: join_cross needs no entry: Spark plans the bounded cross join as a
-#: BroadcastNestedLoopJoin, never a CartesianProduct.
+#: op -> allowed violation kinds. join_cross needs no entry: Spark
+#: plans the bounded cross join as a BroadcastNestedLoopJoin, never a
+#: CartesianProduct.
 WHITELIST = {
     "udf_python_scalar": {"pyudf"},     # deliberate row-UDF API demo
     "udtf_tokenize": {"pyudf"},         # non-Arrow UDTF API demo beside
                                         # its udtf_tokenize_arrow twin
+    # exact equi-depth cuts from one global sort (the exact reference
+    # beside agg_histogram_sketch_bins' sketch-based bins)
+    "agg_histogram_equidepth": {"single_partition_raw"},
 }
 
 AGG_RE = re.compile(r"(Hash|Sort|Object\w*)Aggregate")
@@ -126,14 +127,8 @@ def audit_plan(plan: str) -> set[str]:
 
 
 def main() -> None:
-    from manual_data_ingest_spark.registry import slow_twins
     from manual_data_ingest_spark.session import get_spark
     import __spark_entry__ as E
-
-    whitelist = dict(WHITELIST)
-    for slow in slow_twins():
-        whitelist[slow] = whitelist.get(slow, set()) | {
-            "single_partition_raw", "single_partition_entity_agg"}
 
     only = set(sys.argv[1:]) or None
     spark = get_spark("mdis-plan-audit")
@@ -152,11 +147,9 @@ def main() -> None:
             errs.append((name, f"{type(exc).__name__}: {exc}"[:100]))
             continue
         hits = audit_plan(plan)
-        allowed = whitelist.get(name, set())
+        allowed = WHITELIST.get(name, set())
         extra = hits - allowed
-        # staleness only against the HARD whitelist: a slow twin whose
-        # serial shape happens not to single-partition is fine
-        missing = WHITELIST.get(name, set()) - hits
+        missing = allowed - hits
         if extra:
             bad.append((name, sorted(extra)))
         if missing:

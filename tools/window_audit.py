@@ -78,11 +78,11 @@ WHITELIST = {
     ("operators/aggregates.py", "agg_lorenz_curve", ("segment",)):
         "segment×decile rollup (≤ |segments|×10 rows)",
     ("operators/aggregates.py", "agg_spearman", ("l_returnflag",)):
-        "machine-ledgered slow twin (registry.slow_twins): serial "
-        "per-flag rank is its recorded point",
+        "exact per-flag rank: the exact-answer reference beside "
+        "agg_spearman_grid's grid-binned rho",
     ("operators/aggregates.py", "agg_spearman",
      ("col", "l_returnflag")):
-        "slow twin (tie-count window, same serial contrast arm)",
+        "exact per-flag tie counts (same exact-reference arm)",
     ("operators/aggregates.py", "agg_spearman_grid", ("flag",)):
         "grid-binned rank rollup (bounded value grid)",
     ("operators/aggregates.py", "agg_spearman_grid", ("col", "flag")):
