@@ -29,10 +29,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. ``events`` gets its ts converted (see module doc).
 
     The analyzed DataFrame is cached per (session, sf_dir, table):
-    ``spark.read.parquet`` pays file listing + footer schema read + py4j
-    round trips on EVERY call (~40-80 ms/table here), which at the bench's
-    sub-second query scale was ~half of some queries' wall time — measured
-    via the plan-build/execution split on flagship_q3. A DataFrame is an
+    ``spark.read.parquet`` without a schema pays file listing plus one
+    footer schema-inference Spark JOB on EVERY call — 3.2 s for the
+    first table in a cold JVM, then 0.16-0.19 s per table (sf0.01,
+    4 cores) — which at the bench's sub-second query scale was ~half of
+    some queries' wall time (measured via the plan-build/execution
+    split on flagship_q3). Sinks that read their own output back pass
+    the schema they wrote with, for the same reason. A DataFrame is an
     immutable logical plan, so reuse is semantics-free; this is the same
     move a real deployment makes by resolving tables through a catalog
     (metastore schema cache) instead of re-listing files per query. The

@@ -517,43 +517,46 @@ def ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 100 TB points: (a) rules are evaluated once in the same
     codegen'd projection — N rules never mean N scans (contrast
     `ingest_validate`, the COUNTING twin, where each rule is an
-    independent aggregate); (b) the split writes both sinks from one
-    cached pass; (c) quarantine keeps full rows + machine-readable
-    reasons so replay after a rule fix is a plain re-ingest of the
-    quarantine directory. Reasons are a comma-joined string, not an
-    array — the driver-hashability contract (PARITY.md #19).
-    """
-    import tempfile
+    independent aggregate); (b) the split is ONE parquet write
+    partitioned by `quarantined` (`quarantined=true/` is the
+    quarantine sink, `quarantined=false/` the clean one), so the input
+    is scanned once with no cached copy of the fact table (the writer
+    only sorts each task's rows by `quarantined`: a local sort, no
+    shuffle), and the read-back passes the written schema (no
+    footer-inference job);
+    (c) quarantine keeps full rows + machine-readable reasons so
+    replay after a rule fix is a plain re-ingest of the quarantine
+    directory. Clean files carry the same columns, with an empty
+    `reason`. Reasons are a comma-joined string, not an array — the
+    driver-hashability contract (PARITY.md #19).
 
+    Each side is selected by a partition filter, never by path: an
+    all-clean (or empty) batch writes no `quarantined=true` directory,
+    and a by-path read of it would fail.
+    """
     from manual_data_ingest_spark.io import fan_out
 
     # fan_out (r12): the fixture's single-row-group lineitem scans as
-    # ONE task, so the whole rule-eval + BOTH parquet sink writes ran
-    # single-threaded (sweep: 3.2 s warm). Round-robin to the session
-    # parallelism before the cached pass — at 100 TB the input arrives
-    # pre-split and the guard no-ops (io.fan_out docstring).
+    # ONE task, so the whole rule-eval + sink write ran single-threaded
+    # (sweep: 3.2 s warm). Round-robin to the session parallelism
+    # before the write — at 100 TB the input arrives pre-split and the
+    # guard no-ops (io.fan_out docstring).
     li = fan_out(load_table(spark, sf_dir, "lineitem"))
     reason = F.concat_ws(
         ",",
         F.when(F.col("l_discount") > 0.08, "discount_above_policy"),
         F.when(F.col("l_quantity") >= 49, "quantity_outlier"))
-    flagged = li.withColumn("reason", reason)
+    flagged = li.withColumns({"reason": reason,
+                              "quarantined": reason != ""})
 
     from manual_data_ingest_spark.sources.scans import _tmpdir
-    base = _tmpdir("mdis_dlq_")
-    quarantine, clean = f"{base}/quarantine", f"{base}/clean"
-    flagged.persist()
-    try:
-        (flagged.filter(F.col("reason") != "")
-         .write.mode("overwrite").parquet(quarantine))
-        (flagged.filter(F.col("reason") == "").drop("reason")
-         .write.mode("overwrite").parquet(clean))
-    finally:
-        flagged.unpersist()
+    split = _tmpdir("mdis_dlq_") + "/split"
+    flagged.write.mode("overwrite").partitionBy("quarantined").parquet(split)
 
     from manual_data_ingest_spark.functions.rounding import rnd
-    q = spark.read.parquet(quarantine).select("l_quantity", "reason")
-    c = (spark.read.parquet(clean)
+    back = spark.read.schema(flagged.schema).parquet(split)
+    q = back.filter(F.col("quarantined")).select("l_quantity", "reason")
+    c = (back.filter(~F.col("quarantined"))
          .select("l_quantity", F.lit("OK").alias("reason")))
     return (q.unionByName(c)
             .groupBy("reason")
@@ -583,8 +586,6 @@ def ingest_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     would not re-aggregate). Oracle = full recompute over all events,
     proving refresh(state, delta) == recompute(history ∪ delta).
     """
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     agg = lambda df: (df.groupBy("user_id", "event_type")
@@ -592,9 +593,10 @@ def ingest_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                            F.sum("value").alias("sum_value")))
     from manual_data_ingest_spark.sources.scans import _tmpdir
     state_dir = _tmpdir("mdis_aggstate_") + "/state"
-    agg(ev.filter(day <= 20)).write.mode("overwrite").parquet(state_dir)
+    history = agg(ev.filter(day <= 20))
+    history.write.mode("overwrite").parquet(state_dir)
 
-    state = spark.read.parquet(state_dir)
+    state = spark.read.schema(history.schema).parquet(state_dir)
     delta = agg(ev.filter(day > 20))
     return (state.unionByName(delta)
             .groupBy("user_id", "event_type")

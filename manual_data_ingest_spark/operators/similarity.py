@@ -505,9 +505,6 @@ def sim_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     session — rebuilding the index per query would charge the write to
     every probe, which is not how an index works.
     """
-    import os
-    import tempfile
-
     key = ("ivf_pruned_dir", sf_dir)
     cache = getattr(spark, "_mdis_cache", None)
     if cache is None:

@@ -118,8 +118,6 @@ def pipeline_ingest_register(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream indexer would consume. Per-row uuid-api/entity-api POSTs
     of the reference become this one bulk metadata write.
     """
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     manifest = (d.filter(F.length("text") == F.col("n_chars"))
                 .select("doc_id", "source",

@@ -523,7 +523,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li.repartition(64).write.mode("overwrite").parquet(frag)
     n_frag = len(glob.glob(os.path.join(frag, "part-*")))
 
-    back = spark.read.parquet(frag)
+    back = spark.read.schema(li.schema).parquet(frag)
     n_rows = back.count()  # scalar sizing decision (bytes in production)
     target = max(1, math.ceil(n_rows / 50_000))
     comp = _tmpdir("mdis_comp_")
@@ -532,7 +532,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert n_comp == target, f"compaction wrote {n_comp} files, want {target}"
 
     from manual_data_ingest_spark.functions.rounding import rnd
-    return (spark.read.parquet(comp)
+    return (spark.read.schema(li.schema).parquet(comp)
             .agg(F.count("*").alias("n_rows"),
                  rnd(F.sum("l_quantity")).alias("sum_qty"))
             .select(F.lit(n_frag).cast("int").alias("files_before"),
@@ -596,7 +596,7 @@ def sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
      .parquet(out))
 
     from manual_data_ingest_spark.functions.rounding import rnd
-    back = spark.read.parquet(out).filter(
+    back = spark.read.schema(li.schema).parquet(out).filter(
         F.col("l_shipdate").between("1996-03-01", "1996-03-31"))
     return (back.agg(F.count("*").alias("n_rows"),
                      rnd(F.sum("l_quantity")).alias("sum_qty"))
@@ -641,7 +641,7 @@ def sink_bloom_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
      .option("parquet.block.size", 256 * 1024)
      .parquet(out))
 
-    back = spark.read.parquet(out)
+    back = spark.read.schema(ev.schema).parquet(out)
     return (back.filter(F.col("event_id") % 1009 == 7)
             .select("event_id", "user_id", "event_type")
             .orderBy("event_id"))
@@ -798,7 +798,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
      .write.mode("overwrite")
      .option("parquet.block.size", 256 * 1024)
      .parquet(out))
-    back = (spark.read.parquet(out)
+    back = (spark.read.schema(z.schema).parquet(out)
             .filter(F.col("x").between(16, 31) & F.col("y").between(36, 73)))
     from manual_data_ingest_spark.functions.rounding import rnd
     return back.agg(
@@ -859,14 +859,10 @@ def scan_manifest_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if m.max_dt is not None and m.min_dt is not None
                 and m.max_dt >= lo_dt and m.min_dt <= hi_dt]
     paths = [f"{base}/orders/y={m.y}" for m in selected]
-    if paths:
-        back = (spark.read.parquet(*paths)
-                .filter(F.col("o_orderdate").between(lo, hi)))
-    else:
-        # nothing selected (e.g. empty input wrote no file groups):
-        # an empty relation with the data schema, not a read of zero
-        # paths (which cannot infer a schema)
-        back = spark.createDataFrame([], data.drop("y").schema)
+    # with the data schema given, zero selected paths (e.g. empty input
+    # wrote no file groups) read as an empty relation
+    back = (spark.read.schema(data.drop("y").schema).parquet(*paths)
+            .filter(F.col("o_orderdate").between(lo, hi)))
     from manual_data_ingest_spark.functions.rounding import rnd
     return back.agg(
         F.count("*").alias("n_rows"),
@@ -910,7 +906,7 @@ def sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def read_as_of(v: int):
         paths = dict(log)[v]
-        return spark.read.parquet(*paths)
+        return spark.read.schema(ev.schema).parquet(*paths)
 
     out1 = read_as_of(1).agg(
         F.count("*").alias("n_rows"),
@@ -1079,7 +1075,7 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         # spark-avro jar not deployed here — same contract via parquet
         n.write.mode("overwrite").parquet(f"{out}/n")
-        return spark.read.parquet(f"{out}/n")
+        return spark.read.schema(n.schema).parquet(f"{out}/n")
 
 
 @register("scan_csv_badrecords", """
@@ -1115,8 +1111,6 @@ def scan_csv_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's CSV parser classifies token-count mismatch as malformed —
     so such records are CORRUPT at the parse layer, by design.
     """
-    import os
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars")
     out = _tmpdir("mdis_badcsv_")

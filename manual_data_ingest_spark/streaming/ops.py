@@ -421,6 +421,8 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     seen_batches: list[int] = []
 
+    cols = ("event_id", "user_id", "event_type")
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # idempotence guard: re-delivered batch_ids are skipped (the
         # contract a transactional sink implements with (query_id,
@@ -428,14 +430,13 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_id in seen_batches:
             return
         seen_batches.append(batch_id)
-        (batch_df.select("event_id", "user_id", "event_type")
-         .write.mode("append").parquet(out))
+        batch_df.select(*cols).write.mode("append").parquet(out)
 
     st = read_events_stream(spark, sf_dir)
     q = (st.writeStream.foreachBatch(write_batch)
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.schema(st.select(*cols).schema).parquet(out)
 
 
 def _has_protobuf() -> bool:
@@ -939,13 +940,15 @@ def _checkpoint_resume_demo(spark: SparkSession, sf_dir: str):
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
         shutil.move(f"{tmp}/{part}", f"{src}/{name}.parquet")
 
-    def _run() -> tuple[int, int]:
-        st = (spark.readStream.schema(ev.schema).parquet(src)
-              .groupBy("event_type")
-              .agg(F.count(F.lit(1)).alias("n_events"),
-                   (F.sum(F.floor(F.col("value") * 100.0 + 0.5)
-                          .cast("long")) / 100.0).alias("sum_value")))
+    # one streaming plan, started twice: each start() is a new query
+    # that resumes from the checkpoint
+    st = (spark.readStream.schema(ev.schema).parquet(src)
+          .groupBy("event_type")
+          .agg(F.count(F.lit(1)).alias("n_events"),
+               (F.sum(F.floor(F.col("value") * 100.0 + 0.5)
+                      .cast("long")) / 100.0).alias("sum_value")))
 
+    def _run() -> tuple[int, int]:
         def _sink(batch_df: DataFrame, _batch_id: int) -> None:
             batch_df.coalesce(1).write.mode("overwrite").parquet(out)
 
@@ -975,7 +978,7 @@ def _checkpoint_resume_demo(spark: SparkSession, sf_dir: str):
     evidence = {"run1_batch_id": b1, "run1_rows": r1,
                 "run2_batch_id": b2, "run2_rows": r2,
                 "half_b_rows": n_b}
-    final = (spark.read.parquet(out)
+    final = (spark.read.schema(st.schema).parquet(out)
              .select("event_type", "n_events", "sum_value")
              .localCheckpoint(eager=True))
     shutil.rmtree(base, ignore_errors=True)

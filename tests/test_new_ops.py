@@ -294,6 +294,59 @@ def test_quarantine_split_is_exhaustive_and_exclusive(spark):
     assert sum(got.values()) == len(li)  # exhaustive, no row dropped
 
 
+def _lineitem_dir(tmp_path, table, n_files: int) -> str:
+    """A fixture dir whose lineitem is ``table`` split into ``n_files``
+    part files (one row group each)."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "lineitem.parquet"
+    d.mkdir()
+    step = -(-table.num_rows // n_files)
+    for i in range(n_files):
+        pq.write_table(table.slice(i * step, step), d / f"part-{i:03d}.parquet")
+    return str(tmp_path)
+
+
+def test_quarantine_call_runs_one_job(spark, tmp_path):
+    """ingest_quarantine's call is ONE Spark job: a single partitioned
+    write, read back with the schema it was written with (no cached
+    pass, no second filtered write, no footer-inference job). sf0.001
+    lineitem is split into one file per task slot so `io.fan_out`'s
+    guard no-ops and adds no shuffle-map job of its own."""
+    import pyarrow.parquet as pq
+
+    from manual_data_ingest_spark.io import load_table
+
+    sc = spark.sparkContext
+    li = pq.read_table(f"{SF_SMALL}/lineitem.parquet")
+    sf_dir = _lineitem_dir(tmp_path, li, sc.defaultParallelism)
+    load_table(spark, sf_dir, "lineitem")  # table inference: not the op's
+    group = "test_quarantine_call_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        E.queries()["ingest_quarantine"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_quarantine_all_clean_batch(spark, tmp_path):
+    """A batch with no violator writes no `quarantined=true` directory;
+    the op still returns the one OK row covering every input row."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    li = pq.read_table(f"{SF_SMALL}/lineitem.parquet")
+    clean = li.filter(pc.and_(pc.less_equal(li["l_discount"], 0.08),
+                              pc.less(li["l_quantity"], 49)))
+    assert 0 < clean.num_rows < li.num_rows
+    sf_dir = _lineitem_dir(tmp_path, clean, 1)
+    rows = E.queries()["ingest_quarantine"](spark, sf_dir).collect()
+    assert [(r.reason, r.n_rows) for r in rows] == [("OK", clean.num_rows)]
+    assert rows[0].sum_qty == pc.sum(clean["l_quantity"]).as_py()
+
+
 def test_mode_tie_break_is_smallest_value(spark):
     """agg_mode_deterministic: per-group mode equals the max-count
     quantity, ties broken toward the SMALLEST value (pinned contract,
