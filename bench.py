@@ -29,8 +29,8 @@ and the three data-size knobs in ``KNOBS``. ``BENCH_SCALES=16 python
 bench.py NAME ...`` is the per-query scale run (16×/64× stress rows).
 
 Tools import the helpers: ``bench_session`` (engine session + KNOBS +
-replica dir), ``time_op`` (warmup, timed noop-sink runs, jobs/stages),
-``duckdb_con`` and ``time_sql`` (the comparator side).
+replica dir), ``time_op`` (warmup, timed noop-sink runs, jobs/stages,
+codegen compiles), ``duckdb_con`` and ``time_sql`` (the comparator side).
 """
 
 from __future__ import annotations
@@ -162,9 +162,13 @@ def time_op(spark, fn, sf_dir: str, runs: int = TIMED_RUNS,
     tracker around the first timed run (r11 verdict task 1: a
     floor-bound query's cost is ~N stages × the per-stage scheduling
     constant, so the counts ship with the times); the tracker is read
-    outside the timed calls. ``label`` becomes the jobs' description.
-    Returns ``{"median", "runs", "warmup", "jobs", "stages"}``; session
-    confs are left as found."""
+    outside the timed calls, as is the count of classes Janino compiled
+    in that run (``compiles``: 0 while the codegen cache holds the
+    query's classes). ``label`` becomes the jobs' description. Returns
+    ``{"median", "runs", "warmup", "jobs", "stages", "compiles"}``;
+    session confs are left as found."""
+    from manual_data_ingest_spark.session import codegen_compiles
+
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
@@ -175,7 +179,9 @@ def time_op(spark, fn, sf_dir: str, runs: int = TIMED_RUNS,
     try:
         warmup = timed(run)
         before = set(tracker.getJobIdsForGroup(None))
+        compiled = codegen_compiles(spark)
         times = [timed(run)]
+        compiles = codegen_compiles(spark) - compiled
         jobs = [j for j in tracker.getJobIdsForGroup(None) if j not in before]
         times += [timed(run) for _ in range(runs - 1)]
     finally:
@@ -183,7 +189,8 @@ def time_op(spark, fn, sf_dir: str, runs: int = TIMED_RUNS,
     infos = [tracker.getJobInfo(j) for j in jobs]
     return {"median": round(statistics.median(times), 4), "runs": times,
             "warmup": warmup, "jobs": len(jobs),
-            "stages": sum(len(i.stageIds) for i in infos if i)}
+            "stages": sum(len(i.stageIds) for i in infos if i),
+            "compiles": compiles}
 
 
 def duckdb_con(sf_dir: str):
@@ -240,7 +247,7 @@ def bench_scale(spark, scale: int, names: list[str]) -> dict:
     for name in names:
         rec = time_op(spark, qs[name], sf_dir, label=f"bench:{name}")
         spark_times[name] = rec["median"]
-        job_counts[name] = {"jobs": rec["jobs"], "stages": rec["stages"]}
+        job_counts[name] = {k: rec[k] for k in ("jobs", "stages", "compiles")}
     con = duckdb_con(sf_dir)
     duck_times = {n: time_sql(con, oracles[n]) for n in names if n in oracles}
     con.close()

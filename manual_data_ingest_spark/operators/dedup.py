@@ -50,6 +50,25 @@ FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents
 """
 
 
+def ngrams(df: DataFrame, n: int, fn, name: str) -> DataFrame:
+    """``(doc_id, name)``: ``fn`` (``F.explode``, ``F.size``) of the
+    distinct ``n``-token windows of ``text`` (one window, the whole
+    text, below ``n`` tokens).
+
+    ``text`` is split once, in its own projection. Higher-order functions
+    are interpreted, so a ``split`` inside the lambda ran once per window:
+    O(tokens²) per document. ``_toks`` is referenced twice below, so
+    CollapseProject keeps the split out of the lambda. ``fn`` applies in
+    the same select: an explode of a projected array attribute would get
+    an inferred ``size(...) > 0`` filter, pushed down with the split
+    substituted back in. Both are pinned by
+    tests/test_plans.py::test_ngram_kernels_split_text_once."""
+    toks = df.select("doc_id", F.split("text", " ").alias("_toks"))
+    return toks.select("doc_id", fn(F.array_distinct(F.expr(
+        f"transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
+        f" i -> concat_ws(' ', slice(_toks, i, {n})))"))).alias(name))
+
+
 def _shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) — distinct 5-token shingles per document.
 
@@ -61,15 +80,12 @@ def _shingles(docs: DataFrame) -> DataFrame:
     and at 100 TB the blowup is quadratic in the null count. The oracle
     never had the bug (`array_to_string(NULL)` stays NULL and drops);
     its WHERE clause mirrors this filter for definitional parity."""
-    sh = F.array_distinct(F.expr(
-        "transform(sequence(1, greatest(size(split(text, ' ')) - 4, 1)),"
-        " i -> concat_ws(' ', slice(split(text, ' '), i, 5)))"))
     # fan_out BEFORE the explode: the shingle transform + explode is the
     # CPU-heavy map stage of every consumer, and the fixture scan is one
     # task (single-row-group parquet) — r12 guard, no-op on well-split
     # input (io.fan_out docstring)
-    return (fan_out(docs.filter(F.col("text").isNotNull()))
-            .select("doc_id", F.explode(sh).alias("shingle")))
+    return ngrams(fan_out(docs.filter(F.col("text").isNotNull())), 5,
+                  F.explode, "shingle")
 
 
 @register("dedup_exact", f"""
@@ -164,11 +180,7 @@ def _jaccard_pairs(d: DataFrame, threshold: float) -> DataFrame:
     pairs = (postings.select(F.explode(pair_arr).alias("p"))
              .groupBy(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
              .agg(F.count("*").alias("common")))
-    sizes = fan_out(d).select(
-        "doc_id",
-        F.size(F.array_distinct(F.expr(
-            "transform(sequence(1, greatest(size(split(text, ' ')) - 4, 1)),"
-            " i -> concat_ws(' ', slice(split(text, ' '), i, 5)))"))).alias("n"))
+    sizes = ngrams(fan_out(d), 5, F.size, "n")
     jac = F.col("common").cast("double") / (F.col("sa.n") + F.col("sb.n")
                                             - F.col("common"))
     # no broadcast hint on sizes: tiny here, but one-row-per-doc at scale
@@ -715,10 +727,7 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, corpus-partitioned shuffle join, no broadcast anywhere.
     """
     d = load_table(spark, sf_dir, "documents")
-    ngrams = F.array_distinct(F.expr(
-        "transform(sequence(1, greatest(size(split(text, ' ')) - 7, 1)),"
-        " i -> concat_ws(' ', slice(split(text, ' '), i, 8)))"))
-    ng = d.select("doc_id", F.explode(ngrams).alias("g"))
+    ng = ngrams(d, 8, F.explode, "g")
     ev = ng.filter(F.col("doc_id") % 20 == 0).select("g").distinct()
     hits = (ng.filter(F.col("doc_id") % 20 != 0)
             .join(F.broadcast(ev), "g")
@@ -769,10 +778,7 @@ def dedup_decontaminate_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_plans.py::test_decontaminate_shuffled_never_broadcasts).
     """
     d = load_table(spark, sf_dir, "documents")
-    ngrams = F.array_distinct(F.expr(
-        "transform(sequence(1, greatest(size(split(text, ' ')) - 7, 1)),"
-        " i -> concat_ws(' ', slice(split(text, ' '), i, 8)))"))
-    ng = d.select("doc_id", F.explode(ngrams).alias("g"))
+    ng = ngrams(d, 8, F.explode, "g")
     ev = ng.filter(F.col("doc_id") % 20 == 0).select("g").distinct()
     hits = (ng.filter(F.col("doc_id") % 20 != 0)
             .join(ev.hint("shuffle_hash"), "g")

@@ -270,10 +270,9 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("rn") == 1).drop("rn"))
     train = dedup.filter(F.col("doc_id") % 20 != 0)
 
-    ngrams = F.array_distinct(F.expr(
-        "transform(sequence(1, greatest(size(split(text, ' ')) - 7, 1)),"
-        " i -> concat_ws(' ', slice(split(text, ' '), i, 8)))"))
-    ng = d.select("doc_id", F.explode(ngrams).alias("g"))
+    from manual_data_ingest_spark.operators.dedup import ngrams
+
+    ng = ngrams(d, 8, F.explode, "g")
     ev = ng.filter(F.col("doc_id") % 20 == 0).select("g").distinct()
     contaminated = (ng.filter(F.col("doc_id") % 20 != 0)
                     .join(ev, "g")

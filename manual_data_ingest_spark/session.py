@@ -29,6 +29,19 @@ Every config here is load-bearing at 100 TB scale or for correctness:
   ``CANNOT_MODIFY_STATIC_CONFIG``), so only :func:`get_spark` sets it
   and :func:`ensure_engine_configs` skips it: an external session keeps
   its owner's value.
+- ``spark.sql.codegen.cache.maxEntries=1000`` — Spark keeps compiled
+  whole-stage and expression classes in one JVM-wide cache of 100
+  entries by default. One pass of a workload mix needs more distinct
+  classes than that, always in the same order, so the cache evicted
+  each class before its next use and every pass recompiled every class
+  with Janino and ran it JIT-cold: 145-150 compiles per pass of
+  perfbench's ``corpus_fact`` mix and 120 per pass of ``curator_batch``
+  (passes 2-4, 4 cores). With 1000 entries: at most 6 after the first
+  pass, 0 from the fourth, and ``corpus_fact``'s ``op_geomean_s`` fell
+  27% on 4 cores (CHANGES.md).
+  Generated code is reused only when its source is byte-identical, so
+  results cannot change. It is STATIC too: only :func:`get_spark` sets
+  it, and an external session keeps its owner's value.
 """
 
 from __future__ import annotations
@@ -89,6 +102,11 @@ ENGINE_CONFIGS: dict[str, str] = {
     # Python call-site capture per Column call (module doc); static, so
     # it takes effect only in get_spark's builder.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Codegen class cache (module doc); static. Distinct classes one
+    # pass compiles (4 cores): 161 for perfbench corpus_fact, 132 for
+    # curator_batch, 264 for bench.py's 21-query HEADLINE at sf0.1 —
+    # 1000 is 3.8x the largest working set.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -115,6 +133,13 @@ def get_spark(app_name: str = "manual-data-ingest-spark",
     return builder.getOrCreate()
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``); a codegen cache hit does not count."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 #: configs an externally built session MUST carry or results are wrong:
 #: nanosAsLong (events parquet read throws PARQUET_TYPE_ILLEGAL without
 #: it), UTC rendering and non-NTZ inference (timestamp value/type parity
@@ -134,7 +159,13 @@ _EXTERNAL_KEEP: frozenset[str] = frozenset({
     "spark.sql.files.maxPartitionBytes",
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.python.sql.dataFrameDebugging.enabled",
+    "spark.sql.codegen.cache.maxEntries",
 })
+
+
+#: set in a session's conf once :func:`ensure_engine_configs` has applied
+#: the configs to it; a new session (``newSession``) starts without it
+_APPLIED_KEY = "spark.mdis.engineConfigs.applied"
 
 
 def ensure_engine_configs(spark: SparkSession) -> SparkSession:
@@ -147,7 +178,16 @@ def ensure_engine_configs(spark: SparkSession) -> SparkSession:
     instead of being swallowed. Performance keys are best-effort, and
     the owner's sizing knobs (shuffle partitions, split size) are left
     untouched.
+
+    The full apply is about a dozen py4j round trips, and the driver
+    contract runs this before every operator call. So it happens once
+    per session; a repeat call only reads back the correctness keys and
+    re-applies everything if one of them was changed in between.
     """
+    if spark.conf.get(_APPLIED_KEY, None) == "true" and all(
+            spark.conf.get(k, None) == ENGINE_CONFIGS[k]
+            for k in CORRECTNESS_CONFIGS):
+        return spark
     problems: list[str] = []
     for k, v in ENGINE_CONFIGS.items():
         if k in _EXTERNAL_KEEP:
@@ -168,4 +208,5 @@ def ensure_engine_configs(spark: SparkSession) -> SparkSession:
             "externally provided SparkSession is missing correctness-critical "
             "configs (events parquet reads / timestamp parity would silently "
             "break): " + "; ".join(problems))
+    spark.conf.set(_APPLIED_KEY, "true")
     return spark

@@ -32,7 +32,8 @@ def test_import_bench_leaves_environ_unchanged():
 def test_time_op_record(spark):
     """One timed run of flagship_q3 at sf0.001 returns the shared record
     (median, per-run times, jobs/stages of that run) and leaves every
-    session conf as it found it."""
+    session conf as it found it. The warm timed run compiles nothing:
+    the warmup's classes are still in the codegen cache."""
     import bench
     from manual_data_ingest_spark.registry import all_queries
 
@@ -40,6 +41,7 @@ def test_time_op_record(spark):
     rec = bench.time_op(spark, all_queries()["flagship_q3"], SF_SMALL, runs=1)
     assert len(rec["runs"]) == 1 and rec["median"] == rec["runs"][0] > 0
     assert rec["jobs"] >= 1 and rec["stages"] >= 1
+    assert rec["compiles"] == 0
     assert spark.conf.getAll == before
 
 

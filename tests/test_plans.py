@@ -1536,3 +1536,50 @@ def test_scan_footer_stats_avoids_local_relation(spark):
     plan = _plan(spark, "scan_footer_stats")
     assert "Range" in plan, plan[:2000]
     assert "Scan ExistingRDD" not in plan, plan[:2000]
+
+
+def _splits_in_lambdas(plan) -> int:
+    """``split`` calls inside a lambda in any expression of the JVM
+    logical ``plan``, its children and subqueries."""
+    def walk(e, in_lambda: bool) -> int:
+        cls = e.getClass().getSimpleName()
+        hit = int(in_lambda and cls == "StringSplit")
+        kids = e.children()
+        return hit + sum(walk(kids.apply(i), in_lambda or
+                              cls == "LambdaFunction")
+                         for i in range(kids.size()))
+
+    n, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if "lambdafunction(" in e.toString():  # walk only HOF trees
+                n += walk(e, False)
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_near_jaccard", "dedup_near_jaccard_capped", "dedup_containment",
+    "dedup_decontaminate", "dedup_decontaminate_shuffled",
+    "pipeline_training_mix"])
+def test_ngram_kernels_split_text_once(spark, monkeypatch, name):
+    """The n-gram kernels split each document once, outside the window
+    lambda: HOFs are interpreted, so a split inside it runs once per
+    window (O(tokens²) per document). Checked on the optimized plans, so
+    CollapseProject cannot inline the split back, of the result and of
+    every DataFrame the call materializes on the way."""
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    dfs = []
+    for method in ("localCheckpoint", "checkpoint", "persist"):
+        def recording(self, *args, _real=getattr(cls, method), **kwargs):
+            dfs.append(self)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, method, recording)
+    dfs.append(E.queries()[name](spark, SF_SMALL))
+    assert sum(_splits_in_lambdas(df._jdf.queryExecution().optimizedPlan())
+               for df in dfs) == 0
