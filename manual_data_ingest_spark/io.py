@@ -12,6 +12,8 @@ double's 53-bit mantissa, so float division would corrupt low microseconds).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +23,8 @@ TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+T = TypeVar("T")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -74,9 +78,8 @@ def clear_table_cache(spark: SparkSession, sf_dir: str | None = None) -> None:
         else:
             for key in [k for k in cache if k[0] == sf_dir]:
                 del cache[key]
-    # derived-index caches (sim_ann_ivf_pruned's partitioned copy,
-    # sim_ann_lsh's bucketed table) key as (tag, sf_dir) and hold plans
-    # or paths derived from the same fixture bytes — same staleness rule
+    # derived-index caches (cached_index) hold plans or paths derived
+    # from the same fixture bytes — same staleness rule
     idx = getattr(spark, "_mdis_cache", None)
     if idx is not None:
         if sf_dir is None:
@@ -85,6 +88,24 @@ def clear_table_cache(spark: SparkSession, sf_dir: str | None = None) -> None:
             for key in [k for k in idx
                         if isinstance(k, tuple) and sf_dir in k]:
                 del idx[key]
+
+
+def cached_index(spark: SparkSession, tag: str, sf_dir: str,
+                 build: Callable[[], T]) -> T:
+    """The session's derived index ``tag`` over ``sf_dir``, built by
+    ``build()`` on first use (sim_ann_lsh's bucketed table, the PQ
+    codebooks). An index is built
+    once per (session, sf_dir), not charged to every query that reads
+    it; at 100 TB it is a table on storage. Keyed (tag, sf_dir), so
+    ``clear_table_cache(spark, sf_dir)`` drops it with the fixture."""
+    cache = getattr(spark, "_mdis_cache", None)
+    if cache is None:
+        cache = {}
+        spark._mdis_cache = cache
+    key = (tag, sf_dir)
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]
 
 
 def _eager_node(plan) -> str | None:

@@ -708,74 +708,20 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs with ``doc_id % 20 == 0`` stand in for the benchmark), the
     GPT-3-style overlap rule for keeping eval numbers honest.
 
-    The 100 TB shape: eval benchmarks are tiny (MBs) next to a
-    training corpus (TBs), so the distinct eval n-grams are BROADCAST
-    and the corpus is scanned exactly once — contamination is a
-    broadcast join + left anti-style flag, never a shuffle of the
-    corpus. n-grams stay as strings here to match the oracle; at
-    scale you'd join on xxhash64(ngram) to shrink the broadcast (a
-    64-bit hash per n-gram), an 8x payload cut with collision odds
-    ~n^2/2^64.
-
-    PRECONDITION (r4 verdict item 6): the forced broadcast is sized by
-    the EVAL SET, which for a real benchmark suite is fixed MBs. The
-    FIXTURE's stand-in eval split is 5% of the corpus, so here the
-    broadcast grows with SF — fine at every bench scale (distinct
-    8-grams of 5% of sf0.1 ≈ 410k short strings, tens of MB), a
-    non-starter if your "eval set" is a corpus fraction at 100 TB. For
-    that shape use `dedup_decontaminate_shuffled` below: identical
-    output, corpus-partitioned shuffle join, no broadcast anywhere.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    ng = ngrams(d, 8, F.explode, "g")
-    ev = ng.filter(F.col("doc_id") % 20 == 0).select("g").distinct()
-    hits = (ng.filter(F.col("doc_id") % 20 != 0)
-            .join(F.broadcast(ev), "g")
-            .groupBy("doc_id").agg(F.count("*").alias("n")))
-    return (d.filter(F.col("doc_id") % 20 != 0)
-            .join(hits.withColumnRenamed("doc_id", "hid"),
-                  F.col("doc_id") == F.col("hid"), "left")
-            .select("doc_id", "source",
-                    F.coalesce(F.col("n"), F.lit(0)).alias("n_shared_ngrams"),
-                    F.col("hid").isNull().alias("keep")))
-
-
-@register("dedup_decontaminate_shuffled", """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-ng AS (
-    SELECT doc_id, unnest(list_distinct(
-        [array_to_string(l[i:i+7], ' ')
-         FOR i IN generate_series(1, greatest(len(l) - 7, 1))])) AS g
-    FROM toks
-),
-ev AS (SELECT DISTINCT g FROM ng WHERE doc_id % 20 = 0),
-hits AS (
-    SELECT tr.doc_id, count(*) AS n
-    FROM ng tr JOIN ev ON tr.g = ev.g
-    WHERE tr.doc_id % 20 <> 0
-    GROUP BY 1
-)
-SELECT d.doc_id, d.source,
-       coalesce(h.n, 0)::BIGINT AS n_shared_ngrams,
-       (h.doc_id IS NULL) AS keep
-FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-WHERE d.doc_id % 20 <> 0
-""")
-def dedup_decontaminate_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`dedup_decontaminate` for eval sets that are a CORPUS FRACTION
-    rather than a fixed benchmark: identical output, but the n-gram
-    overlap is a SHUFFLE-HASH join partitioned on the n-gram — nothing
-    is broadcast, so the eval side may be arbitrarily large (r4
-    verdict item 6: the broadcast twin's forced `F.broadcast(ev)` is
-    sized by the eval split and cannot grow with the corpus).
-
-    shuffle_hash over merge: both sides arrive hash-partitioned on
-    `g`; SHJ builds a table from the (smaller) eval side per partition
-    and streams the training side, skipping the two full sorts a
-    sort-merge join would add on a key that is a throwaway string.
-    AQE may still pick SMJ if a partition's build side would not fit —
-    acceptable; the assertion is no-broadcast, not SHJ-forever
+    The n-gram overlap is a SHUFFLE-HASH join partitioned on the
+    n-gram, so nothing is broadcast and the eval side may grow with
+    the corpus (the fixture's eval split is 5% of it). shuffle_hash
+    over merge: both sides arrive hash-partitioned on `g`; SHJ builds
+    a table from the (smaller) eval side per partition and streams the
+    training side, skipping the two full sorts a sort-merge join would
+    add on a key that is a throwaway string. Without the hint AQE
+    picks SMJ on the grown fixture, the slowest of the three plans
+    measured (SCALE.md). AQE may still pick SMJ if a partition's
+    build side would not fit — acceptable; the assertion is
+    no-broadcast, not SHJ-forever
     (tests/test_plans.py::test_decontaminate_shuffled_never_broadcasts).
+    A fixed MB-scale benchmark suite could broadcast its n-grams
+    instead (SCALE.md).
     """
     d = load_table(spark, sf_dir, "documents")
     ng = ngrams(d, 8, F.explode, "g")
@@ -820,10 +766,11 @@ def dedup_span_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped everywhere else, then documents are reassembled from their
     surviving spans. Catches boilerplate repeated across documents that
     whole-doc hashing misses. One shuffle on the span text (the window);
-    at 100 TB hash the span to a 16-byte digest before the shuffle so
-    exchange rows are fixed-width — same plan, 10× smaller shuffle; the
-    reassembly groupBy shuffles on doc_id, already the layout key of the
-    corpus, so AQE coalesces it into the scan partitioning.
+    the span text rides through that exchange either way (survivors
+    are reassembled from it), so keying it on a 64-bit span digest
+    instead only adds a column (SCALE.md); the reassembly groupBy
+    shuffles on doc_id, already the layout key of the corpus, so AQE
+    coalesces it into the scan partitioning.
     """
     d = load_table(spark, sf_dir, "documents")
     base = d.select("doc_id", F.split("text", " ").alias("l"))
@@ -896,62 +843,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(F.col("na") <= F.col("nb"), F.col("id_a"))
                     .otherwise(F.col("id_b")).alias("contained_id"),
                     rnd(cont, 6).alias("containment")))
-
-
-@register("dedup_span_chunks_digest", f"""
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS l FROM documents
-), c AS (
-  SELECT doc_id, i - 1 AS chunk_idx,
-         array_to_string(l[(i-1)*10+1:(i-1)*10+10], ' ') AS chunk
-  FROM w, unnest(generate_series(1, cast(ceil(len(l)/10.0) AS INT))) AS g(i)
-), k AS (
-  SELECT *, row_number() OVER (PARTITION BY chunk
-                               ORDER BY doc_id, chunk_idx) AS rn
-  FROM c
-)
-SELECT doc_id,
-       count(*)               AS n_chunks,
-       count(*) FILTER (rn = 1) AS n_kept,
-       {sql_rnd("count(*) FILTER (rn = 1)::DOUBLE / count(*)", 6)}
-           AS kept_frac,
-       md5(coalesce(string_agg(chunk, '|' ORDER BY chunk_idx)
-                    FILTER (rn = 1), '')) AS kept_md5
-FROM k GROUP BY doc_id
-""")
-def dedup_span_chunks_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The promised 100 TB optimization of `dedup_span_chunks`, now
-    registered: the first-occurrence window partitions on
-    xxhash64(span) — a FIXED 8-byte shuffle key — instead of the span
-    text, so exchange rows shrink ~10× while the keep decisions stay
-    identical (a collision would need two distinct spans sharing a
-    64-bit hash inside the same corpus: ~n²/2⁶⁵, far below the
-    dedup noise floor; the oracle — the SAME result contract as the
-    text-keyed twin — would hash-fail on any collision that mattered).
-    The reassembly still carries the span text forward for survivors
-    only, so the md5 content check is unchanged.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", F.split("text", " ").alias("l"))
-    nch = F.ceil(F.size("l") / F.lit(10.0)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), nch - 1),
-        lambda j: F.concat_ws(" ", F.slice(F.col("l"), j * 10 + 1, 10)))
-    c = base.select("doc_id",
-                    F.posexplode(chunks).alias("chunk_idx", "chunk"))
-    c = c.withColumn("h", F.xxhash64("chunk"))
-    w = Window.partitionBy("h").orderBy("doc_id", "chunk_idx")
-    k = c.withColumn("rn", F.row_number().over(w))
-    kept_struct = F.when(F.col("rn") == 1,
-                         F.struct("chunk_idx", "chunk"))
-    return (k.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"),
-        F.count(F.when(F.col("rn") == 1, 1)).alias("n_kept"),
-        rnd(F.count(F.when(F.col("rn") == 1, 1)).cast("double")
-            / F.count("*"), 6).alias("kept_frac"),
-        F.md5(F.concat_ws("|", F.transform(
-            F.array_sort(F.collect_list(kept_struct)),
-            lambda s: s["chunk"]))).alias("kept_md5")))
 
 
 @register("dedup_template_mask", """

@@ -1,9 +1,9 @@
 """Distributed iterative ML primitives (SURVEY.md §2.12b companion).
 
 ``ml_kmeans_embeddings`` is Lloyd's k-means over the embeddings table —
-the coarse-quantizer trainer that ``sim_ann_ivf`` / ``sim_ann_ivf_pruned``
-presuppose (their docstrings say "cells come from a k-means coarse
-quantizer"; this operator is that trainer). Fixed K and iteration count,
+the coarse-quantizer trainer that ``sim_ann_ivf`` presupposes (its
+docstring says "cells come from a k-means coarse quantizer"; this
+operator is that trainer). Fixed K and iteration count,
 deterministic initialization, so the whole trajectory is reproducible
 and oracle-able.
 
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from manual_data_ingest_spark.functions.rounding import rnd, sql_rnd
-from manual_data_ingest_spark.io import load_table
+from manual_data_ingest_spark.io import cached_index, load_table
 from manual_data_ingest_spark.registry import register
 from manual_data_ingest_spark.operators.similarity import _COS as _SIM_COS
 
@@ -708,17 +708,12 @@ def _pq_index(spark: SparkSession,
     (session, sf_dir), not a per-query cost (at 100 TB they are the
     written code table an ADC search reads). (tag, sf_dir) keys →
     io.clear_table_cache invalidates with the fixture."""
-    cache = getattr(spark, "_mdis_cache", None)
-    if cache is None:
-        cache = {}
-        spark._mdis_cache = cache
-    key = ("pq_index", sf_dir)
-    if key not in cache:
+    def build():
         vd, cd, final = _pq_train(spark, sf_dir)
-        cache[key] = (vd,
-                      cd.localCheckpoint(eager=True),
-                      final.localCheckpoint(eager=True))
-    return cache[key]
+        return (vd, cd.localCheckpoint(eager=True),
+                final.localCheckpoint(eager=True))
+
+    return cached_index(spark, "pq_index", sf_dir, build)
 
 
 @register("sim_pq_adc_topk", _pq_oracle_prefix(

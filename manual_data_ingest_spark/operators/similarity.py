@@ -62,7 +62,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from manual_data_ingest_spark.io import load_table
+from manual_data_ingest_spark.io import cached_index, load_table
 from manual_data_ingest_spark.functions.rounding import rnd, sql_rnd
 from manual_data_ingest_spark.registry import register
 
@@ -261,27 +261,22 @@ def _lsh_index(spark: SparkSession, sf_dir: str):
     """The session-cached LSH ANN index: (bucketed corpus, probe rows).
 
     Both halves are ONE artifact, built once per (session, sf_dir) and
-    checkpointed — the `sim_ann_ivf_pruned` amortization rule (charging
+    checkpointed — the io.cached_index amortization rule (charging
     the index build to every query is not how an index works; at
     100 TB this is the bucket-partitioned table on storage). The probe
     set rides along: re-deriving it per call re-shuffled the whole
     corpus through the label window — measured ~0.15 s/call at the
-    bench 4× replica for 5 rows that never change. (tag, sf_dir) keys
-    → io.clear_table_cache invalidates both with the fixture."""
-    cache = getattr(spark, "_mdis_cache", None)
-    if cache is None:
-        cache = {}
-        spark._mdis_cache = cache
-    key = ("lsh_bucketed", sf_dir)
-    if key not in cache:
-        cache[key] = (load_table(spark, sf_dir, "embeddings")
-                      .withColumn("bucket", F.expr(_LSH_BUCKET_SPARK))
-                      .localCheckpoint(eager=True))
-    b = cache[key]
-    pkey = ("lsh_probes", sf_dir)
-    if pkey not in cache:
-        cache[pkey] = _lsh_probe_derivation(b).localCheckpoint(eager=True)
-    return b, cache[pkey]
+    bench 4× replica for 5 rows that never change.
+    io.clear_table_cache invalidates both with the fixture."""
+    b = cached_index(
+        spark, "lsh_bucketed", sf_dir,
+        lambda: (load_table(spark, sf_dir, "embeddings")
+                 .withColumn("bucket", F.expr(_LSH_BUCKET_SPARK))
+                 .localCheckpoint(eager=True)))
+    probes = cached_index(
+        spark, "lsh_probes", sf_dir,
+        lambda: _lsh_probe_derivation(b).localCheckpoint(eager=True))
+    return b, probes
 
 
 def _lsh_probe_derivation(b: DataFrame) -> DataFrame:
@@ -321,7 +316,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE. Recall vs the exact baseline is measured in tests.
     #
     # The bucketed corpus is an ANN INDEX: built once per (session,
-    # sf_dir) and cached via localCheckpoint, the `sim_ann_ivf_pruned`
+    # sf_dir) and cached via localCheckpoint, the io.cached_index
     # amortization rule (charging the index build to every query is
     # not how an index works). At 100 TB this cache is the
     # bucket-partitioned table on storage.
@@ -360,6 +355,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k-means coarse quantizer and the table is WRITTEN partitioned by
     # cell, so the probe→cell join prunes file partitions (DPP) and
     # reads ~1/k of the data — the physical design sim_topk can't have.
+    # That partitioned-index plan is a SCALE.md design note: over the
+    # fixtures' 10 small cells it scored one task per probed cell file
+    # and lost to this single scan.
     e = load_table(spark, sf_dir, "embeddings")
     wp = Window.partitionBy("label").orderBy("vec_id")
     probes = (e.withColumn("rn", F.row_number().over(wp))
@@ -379,6 +377,15 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") <= 3)
             .select("probe_id", "neighbor_id",
                     rnd(F.col("score_raw"), 6).alias("score"), "rn"))
+
+
+#: Tile edge for sim_threshold_pairs' per-label matmul: the BLAS sweet
+#: spot, and the grain the chunk-pair fan-out measured best on a 64×
+#: embeddings block (128 over-fragmented it, BASELINE.md). A memory
+#: knob, not a semantic one — output is tiling-invariant by
+#: construction (pinned in tests/test_new_ops.py at 64 and 7). Read on
+#: the driver when the plan is built.
+_CHUNK_ROWS = 4096
 
 
 @register("sim_threshold_pairs", f"""
@@ -407,11 +414,21 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays exact. At 100 TB blocks come from the IVF/LSH partitioner and
     each executor runs one matmul per block: the classic blocked
     similarity-join design.
+
+    Tiling: a block is scored in ``_CHUNK_ROWS``-row tiles, the tile
+    pairs (i0 ≤ j0) of its upper triangle, so each matmul's memory is
+    O(chunk²) whatever the block size; a block of at most one tile is
+    exactly the single matmul. Rows are sorted by vec_id, so a diagonal
+    tile keeps its strict upper triangle and an off-diagonal tile keeps
+    every hit with id_a < id_b. The block's input rows still sit in one
+    worker; the chunk-pair fan-out for a cell that outgrows one worker
+    is a design note in SCALE.md.
     """
     import numpy as np
     import pandas as pd
 
     thr = _SIM_THRESHOLD
+    c = _CHUNK_ROWS  # captured here so a patched value reaches the workers
 
     def block(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf[pdf["embedding"].notna()]  # NULL vectors score nothing
@@ -424,14 +441,23 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         norms = np.sqrt((m * m).sum(axis=1))
-        s = (m @ m.T) / np.outer(norms, norms)
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = s[iu, ju] >= thr
-        sc = s[iu[keep], ju[keep]]
+        hits = []
+        for i0 in range(0, len(ids), c):
+            for j0 in range(i0, len(ids), c):
+                s = ((m[i0:i0 + c] @ m[j0:j0 + c].T)
+                     / np.outer(norms[i0:i0 + c], norms[j0:j0 + c]))
+                if i0 == j0:
+                    iu, ju = np.triu_indices(len(s), k=1)
+                    keep = s[iu, ju] >= thr
+                    iu, ju = iu[keep], ju[keep]
+                else:
+                    iu, ju = np.nonzero(s >= thr)
+                hits.append((iu + i0, ju + j0, s[iu, ju]))
+        ia, ja, sc = (np.concatenate(x) for x in zip(*hits))
         return pd.DataFrame({
-            "id_a": ids[iu[keep]],
-            "id_b": ids[ju[keep]],
-            "label": pdf["label"].iloc[0] if len(ids) else 0,
+            "id_a": ids[ia],
+            "id_b": ids[ja],
+            "label": pdf["label"].iloc[0],
             "score": np.floor(sc * 1e6 + 0.5) / 1e6,
         })
 
@@ -473,72 +499,6 @@ def sim_normalize_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return en.select("vec_id", "label",
                      rnd(F.col("nrm"), 6).alias("norm"),
                      unit_q.alias("unit_vec_q"))
-
-
-@register("sim_ann_ivf_pruned", f"""
-WITH {_E_CTE},
-probes AS (
-    SELECT vec_id AS probe_id, label, v FROM e WHERE label < 5
-    QUALIFY row_number() OVER (PARTITION BY label ORDER BY vec_id) = 1
-)
-SELECT probe_id, neighbor_id, score, rn FROM (
-    SELECT a.probe_id, b.vec_id AS neighbor_id,
-           {sql_rnd(_COS, 6)} AS score,
-           row_number() OVER (PARTITION BY a.probe_id
-                              ORDER BY {_COS} DESC, b.vec_id) AS rn
-    FROM probes a JOIN e b ON a.label = b.label AND b.vec_id <> a.probe_id
-) WHERE rn <= 3
-""")
-def sim_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``sim_ann_ivf`` with its 100 TB physical design MADE REAL: the
-    corpus is WRITTEN partitioned by cell (`label`), and the probe→cell
-    join prunes the scan to the probed partitions — the plan carries a
-    `dynamicpruning` partition filter, so unprobed cells are never read
-    (plan-asserted in tests/test_plans.py). Same oracle as
-    ``sim_ann_ivf``: the physical layout must not change the answer.
-
-    At 100 TB this is THE difference between reading ~1/k of the bytes
-    and reading everything: label here stands in for a k-means coarse
-    quantizer cell, the partitioned write is the index build (one-time,
-    amortized over every query), and nprobe>1 simply widens the pruned
-    partition set. The partitioned copy is cached per (sf_dir) for the
-    session — rebuilding the index per query would charge the write to
-    every probe, which is not how an index works.
-    """
-    key = ("ivf_pruned_dir", sf_dir)
-    cache = getattr(spark, "_mdis_cache", None)
-    if cache is None:
-        cache = {}
-        spark._mdis_cache = cache
-    emb_schema = load_table(spark, sf_dir, "embeddings").schema
-    if key not in cache:
-        from manual_data_ingest_spark.sources.scans import _tmpdir
-        d = _tmpdir("mdis_ivf_")
-        (load_table(spark, sf_dir, "embeddings")
-         .write.mode("overwrite").partitionBy("label").parquet(d))
-        cache[key] = d
-    # explicit schema: an empty corpus writes zero part files and
-    # inference fails (empty-input sweep finding)
-    e = spark.read.schema(emb_schema).parquet(cache[key])
-
-    wp = Window.partitionBy("label").orderBy("vec_id")
-    probes = (e.withColumn("rn", F.row_number().over(wp))
-              .filter((F.col("rn") == 1) & (F.col("label") < 5))
-              .select(F.col("vec_id").alias("probe_id"),
-                      F.col("label").alias("plabel"),
-                      F.col("embedding").alias("pv")))
-    score = cos_arrow(F.col("pv"), F.col("embedding"))
-    return (F.broadcast(probes)
-            .join(e, (F.col("plabel") == F.col("label"))
-                  & (F.col("vec_id") != F.col("probe_id")))
-            .select("probe_id", F.col("vec_id").alias("neighbor_id"),
-                    score.alias("score_raw"))
-            .withColumn("rn", F.row_number().over(
-                Window.partitionBy("probe_id")
-                .orderBy(F.col("score_raw").desc(), F.col("neighbor_id"))))
-            .filter(F.col("rn") <= 3)
-            .select("probe_id", "neighbor_id",
-                    rnd(F.col("score_raw"), 6).alias("score"), "rn"))
 
 
 _Q_CTE = """
@@ -1107,104 +1067,6 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") <= 3)
             .select("probe_id", "neighbor_id",
                     rnd(F.col("score_raw"), 6).alias("score"), "rn"))
-
-
-#: Chunk size for the chunk-pair BLAS decomposition: the BLAS sweet
-#: spot, and the grain that kept the 64× run at the plain path's speed
-#: (128 over-fragmented it to 43 s, BASELINE.md). A memory/parallelism
-#: knob, not a semantic one — output is chunking-invariant by
-#: construction (pinned in tests/test_new_ops.py at chunk=64). Read on
-#: the driver when the plan is built.
-_CHUNK_ROWS = 4096
-
-
-@register("sim_threshold_pairs_chunked", f"""
-WITH {_E_CTE}
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label,
-       {sql_rnd(_COS, 6)} AS score
-FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_COS} >= {_SIM_THRESHOLD}
-""")
-def sim_threshold_pairs_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`sim_threshold_pairs` with the per-block quadratic BOUNDED — the
-    r5 64× block measured the label-blocked BLAS at 12.2 s (blocks 64×
-    bigger → M·Mᵀ memory and flops grow quadratically PER TASK, the
-    one super-linear default path in the table). This twin runs the
-    standard chunk-pair decomposition from the blocked-similarity-join
-    literature: each label block splits into ⌈n/chunk⌉ row chunks,
-    every unordered CHUNK PAIR (ci ≤ cj) becomes one `applyInPandas`
-    task computing a ≤ chunk×chunk matmul — per-task memory is O(chunk²)
-    REGARDLESS of block size, and the pair tasks parallelize across the
-    cluster instead of serializing inside one worker.
-
-    Cost model made explicit: each row is shuffled to ⌈n/chunk⌉ tasks
-    (the unavoidable replication of exact all-pairs); flops are
-    identical to the one-shot matmul — what changes is the MEMORY bound
-    and the parallelism grain. Same oracle as `sim_threshold_pairs`;
-    row-identical output pinned at both a single-chunk SF and the
-    multi-chunk sf0.1 (tests/test_new_ops.py).
-    """
-    import numpy as np
-    import pandas as pd
-
-    thr = _SIM_THRESHOLD
-
-    e = load_table(spark, sf_dir, "embeddings")
-    counts = e.groupBy("label").agg(F.count("*").alias("n"))
-    nch = F.greatest(F.lit(1),
-                     F.ceil(F.col("n") / F.lit(_CHUNK_ROWS))).cast("int")
-    ec = (e.join(counts, "label")
-          .withColumn("nch", nch)
-          .withColumn("my", (F.col("vec_id") % F.col("nch")).cast("int")))
-    fan = (ec.select(
-        "label", "vec_id", "embedding", "my",
-        F.explode(F.sequence(F.lit(0), F.col("nch") - 1)).alias("other"))
-        .withColumn("ci", F.least("my", "other"))
-        .withColumn("cj", F.greatest("my", "other"))
-        .drop("other"))
-
-    def block(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
-                              "id_b": pd.Series([], dtype="int64"),
-                              "label": pd.Series([], dtype="int32"),
-                              "score": pd.Series([], dtype="float64")})
-        pdf = pdf[pdf["embedding"].notna()]
-        if len(pdf) == 0:
-            return empty
-        label = pdf["label"].iloc[0]
-        ci, cj = pdf["ci"].iloc[0], pdf["cj"].iloc[0]
-        a = pdf[pdf["my"] == ci].sort_values("vec_id")
-        ia = a["vec_id"].to_numpy()
-        if len(ia) == 0:
-            return empty
-        ma = np.stack(a["embedding"].to_numpy()).astype(np.float64)
-        na = np.sqrt((ma * ma).sum(axis=1))
-        if ci == cj:
-            s = (ma @ ma.T) / np.outer(na, na)
-            iu, ju = np.triu_indices(len(ia), k=1)
-            keep = s[iu, ju] >= thr
-            id_a, id_b = ia[iu[keep]], ia[ju[keep]]
-            sc = s[iu[keep], ju[keep]]
-        else:
-            b = pdf[pdf["my"] == cj].sort_values("vec_id")
-            ib = b["vec_id"].to_numpy()
-            if len(ib) == 0:
-                return empty
-            mb = np.stack(b["embedding"].to_numpy()).astype(np.float64)
-            nb = np.sqrt((mb * mb).sum(axis=1))
-            s = (ma @ mb.T) / np.outer(na, nb)
-            iu, ju = np.where(s >= thr)
-            xa, xb = ia[iu], ib[ju]
-            id_a, id_b = np.minimum(xa, xb), np.maximum(xa, xb)
-            sc = s[iu, ju]
-        return pd.DataFrame({
-            "id_a": id_a, "id_b": id_b,
-            "label": label,
-            "score": np.floor(sc * 1e6 + 0.5) / 1e6,
-        })
-
-    return fan.groupBy("label", "ci", "cj").applyInPandas(
-        block, schema="id_a long, id_b long, label int, score double")
 
 
 _RRF_K = 60      # the standard reciprocal-rank-fusion damping constant

@@ -260,8 +260,8 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fixed MB-scale benchmark suite broadcasts (verified in
     tests/test_plans.py: the executed plan at fixture scale is a
     BroadcastHashJoin), while a corpus-fraction eval split degrades
-    to the shuffle shape of `dedup_decontaminate_shuffled` instead
-    of OOMing the driver. Same-session A/B at 4×: 2.59 s hinted →
+    to the shuffle shape of `dedup_decontaminate` instead of OOMing
+    the driver. Same-session A/B at 4×: 2.59 s hinted →
     2.65 s unhinted (parity within noise; BASELINE.md r6).
     """
     d = load_table(spark, sf_dir, "documents")

@@ -11,7 +11,8 @@ plus one representative per structural family.
 Original failure classes (all fixed, each annotated at the fix site):
 - write-then-readback schema inference: zero part files → explicit
   `.schema(...)` on read-back (sink_partitioned, sink_merge_upsert,
-  scan_manifest_pruned, pipeline_ingest_register, sim_ann_ivf_pruned)
+  scan_manifest_pruned, pipeline_ingest_register, and the since-deleted
+  partitioned IVF index)
 - ANSI DIVIDE_BY_ZERO on count denominators → `when(n > 0, ...)`
   (win_funnel_steps, ingest_dq_suite, ingest_gdpr_erasure)
 - driver-side 1/0 on an empty node set → early empty return
@@ -37,7 +38,7 @@ if _REPO not in sys.path:
 FAST_PROBES = [
     # regression set
     "sink_partitioned", "sink_merge_upsert", "scan_manifest_pruned",
-    "pipeline_ingest_register", "sim_ann_ivf_pruned", "win_funnel_steps",
+    "pipeline_ingest_register", "sim_ann_ivf", "win_funnel_steps",
     "ingest_dq_suite", "ingest_gdpr_erasure", "graph_pagerank",
     "scan_footer_stats",
     # family representatives
@@ -103,7 +104,7 @@ SLOW_PROBES = [
     "sim_mmr_diversify", "agg_runs_test", "agg_poisson_rate_ci",
     "sample_epoch_shuffle", "ml_propensity_weighting",
     # r5 additions
-    "dedup_decontaminate_shuffled", "sim_ann_recall_report",
+    "dedup_decontaminate", "sim_ann_recall_report",
     "ingest_fk_coverage_report", "sim_ann_lsh_multiprobe",
     "join_band_bucketed", "win_range_duration",
     "agg_spearman", "agg_spearman_grid", "agg_overlap_minhash", "win_macd",
@@ -114,7 +115,7 @@ SLOW_PROBES = [
     "agg_anova_f", "agg_cramers_v",
     "graph_kcore", "dedup_minhash_estimate_error",
     "pipeline_quality_filter_ablation", "bitwise_funcs",
-    "agg_acf_multi_lag", "sim_threshold_pairs_chunked",
+    "agg_acf_multi_lag", "sim_threshold_pairs",
     "sim_rrf_fusion", "sim_bm25_topk", "join_bloom_prefilter",
     "ml_two_proportion_ztest", "agg_lorenz_curve",
     "sample_neyman_allocation",
@@ -229,7 +230,7 @@ SLOW_NULL_PROBES = [
     "sim_mmr_diversify", "agg_runs_test", "agg_poisson_rate_ci",
     "sample_epoch_shuffle", "ml_propensity_weighting",
     # r5 additions
-    "dedup_decontaminate_shuffled", "sim_ann_recall_report",
+    "dedup_decontaminate", "sim_ann_recall_report",
     "ingest_fk_coverage_report", "sim_ann_lsh_multiprobe",
     "join_band_bucketed", "win_range_duration",
     "agg_spearman", "agg_spearman_grid", "agg_overlap_minhash", "win_macd",
@@ -240,7 +241,7 @@ SLOW_NULL_PROBES = [
     "agg_anova_f", "agg_cramers_v",
     "graph_kcore", "dedup_minhash_estimate_error",
     "pipeline_quality_filter_ablation", "bitwise_funcs",
-    "agg_acf_multi_lag", "sim_threshold_pairs_chunked",
+    "agg_acf_multi_lag",
     "sim_rrf_fusion", "sim_bm25_topk", "join_bloom_prefilter",
     "ml_two_proportion_ztest", "agg_lorenz_curve",
     "pipeline_curriculum_order_scalable", "sample_neyman_allocation",

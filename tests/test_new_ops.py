@@ -907,15 +907,6 @@ def test_train_val_test_split_laws(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_span_digest_equals_text_keyed(spark):
-    """The xxhash64-keyed shuffle must make identical keep decisions to
-    the text-keyed twin — strategy differs, contract doesn't."""
-    qs = E.queries()
-    a = _rows(qs["dedup_span_chunks"](spark, SF_ORACLE))
-    b = _rows(qs["dedup_span_chunks_digest"](spark, SF_ORACLE))
-    assert a == b
-
-
 def test_sketch_bins_near_equal_depth(spark):
     """Sketch-boundary bins must be near-equal-depth: every bin within
     the sketch's rank-error envelope of n/10, and bins conserve rows."""
@@ -2210,23 +2201,22 @@ def test_kcore_fixed_iterations_reach_fixpoint(spark):
 
 
 def test_chunked_threshold_pairs_equals_blocked(spark, monkeypatch):
-    """The chunk-pair decomposition must be row-identical to the
-    one-matmul-per-label path — at the default chunk (4096: single
-    chunk per fixture label, the degenerate identity) AND with the
-    chunk forced to 64 (sf0.1's 200 rows/label = 4 chunks, the
-    multi-chunk path actually exercised; the chunk size is read when
-    the plan is built)."""
-    qs = E.queries()
-    for sf_dir in (SF_ORACLE, "/root/testdata/sf0.1"):
-        a = _rows(qs["sim_threshold_pairs"](spark, sf_dir))
-        b = _rows(qs["sim_threshold_pairs_chunked"](spark, sf_dir))
-        assert a == b, sf_dir
+    """sim_threshold_pairs' tiled matmul is row-identical to the one
+    tile per label block of the default (4096: sf0.1 has 200
+    rows/label) at tile 64 and at tile 7 (200 % 7 != 0: a ragged last
+    tile), and stays equal to the oracle at sf0.01 when tiled. The
+    tile size is read when the plan is built."""
+    import os
+
     from manual_data_ingest_spark.operators import similarity
 
-    monkeypatch.setattr(similarity, "_CHUNK_ROWS", 64)
-    a = _rows(qs["sim_threshold_pairs"](spark, "/root/testdata/sf0.1"))
-    b = _rows(qs["sim_threshold_pairs_chunked"](spark, "/root/testdata/sf0.1"))
-    assert a == b
+    sf_dir = os.path.join(os.path.dirname(SF_ORACLE), "sf0.1")
+    qs = E.queries()
+    blocked = _rows(qs["sim_threshold_pairs"](spark, sf_dir))
+    for c in (64, 7):
+        monkeypatch.setattr(similarity, "_CHUNK_ROWS", c)
+        assert _rows(qs["sim_threshold_pairs"](spark, sf_dir)) == blocked, c
+        _oracle_exact(spark, "sim_threshold_pairs")
 
 
 def test_bloom_prefilter_no_false_negatives_and_fp_bound(spark):

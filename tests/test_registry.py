@@ -59,6 +59,29 @@ def test_all_queries_is_registration_order():
     assert list(all_queries()) == list(registry._QUERIES)
 
 
+#: Op groups that share one oracle by design: each member shows a
+#: different capability (file format, UDF runtime, stream state bound)
+#: with the same answer. Two plans for one answer are one op, so a new
+#: group here needs a reviewed capability, not an op name.
+CAPABILITY_GROUPS = {
+    frozenset({"scan_csv_roundtrip", "scan_excel", "scan_avro_roundtrip"}),
+    frozenset({"scan_json_lines", "scan_xml_roundtrip"}),
+    frozenset({"udf_python_scalar", "udf_arrow_scalar"}),
+    frozenset({"udtf_tokenize", "udtf_tokenize_arrow"}),
+    frozenset({"stream_dedup", "stream_dedup_within_watermark"}),
+}
+
+
+def test_shared_oracles_are_capability_groups():
+    """Ops grouped by whitespace-collapsed, lower-cased oracle SQL: the
+    groups of more than one op are exactly CAPABILITY_GROUPS."""
+    groups: dict[str, set[str]] = {}
+    for name, sql in all_oracles().items():
+        groups.setdefault(" ".join(sql.lower().split()), set()).add(name)
+    shared = {frozenset(g) for g in groups.values() if len(g) > 1}
+    assert shared == CAPABILITY_GROUPS, sorted(map(sorted, shared))
+
+
 def test_plan_audit_whitelist_names_registered_ops():
     """Every plan-audit exemption names a live operator: deleting an op
     must take its exemption with it."""

@@ -124,8 +124,6 @@ WHITELIST = {
         "probe derivation: rn==1 per label → WindowGroupLimit",
     ("operators/similarity.py", "sim_ann_ivf", ("label",)):
         "probe derivation: rn==1 per label → WindowGroupLimit",
-    ("operators/similarity.py", "sim_ann_ivf_pruned", ("label",)):
-        "probe derivation: rn==1 per label → WindowGroupLimit",
     ("operators/similarity.py", "sim_quantize_int8", ("label",)):
         "probe derivation: rn==1 per label → WindowGroupLimit",
     ("operators/similarity.py", "sim_mmr_diversify", ("label",)):
