@@ -21,7 +21,14 @@ headline number for the 100 TB design claim; sf0.1 measures the floor.
     {"metric": ..., "value": <sf0.1 total sec>, "unit": "sec",
      "queries": {...}, "sf": 0.1, "duckdb": {...}, "ratio": {...},
      "median_ratio": ..., "scales": {"4x": {"queries": ..., "duckdb":
-     ..., "ratio": ..., "median_ratio": ..., "queries_le_2x": ...}}}
+     ..., "ratio": ..., "median_ratio": ..., "queries_le_2x": ...}},
+     "setup": {"get_spark_s": ..., "resolve_tables_s": ...,
+               "resolve_jobs": ...}}
+
+``setup`` is the cold start a one-batch curator process pays before
+its first query: the session build, and resolving every table of
+$SPARK_GRAFT_SF_DIR through ``io.load_table`` (seconds, and the Spark
+jobs that launched).
 
 Env knobs: BENCH_RUNS (timed runs/query, default 3), BENCH_SCALES
 (comma list of replica multipliers, default "1,4"; "1" = plain sf dir),
@@ -29,8 +36,9 @@ and the three data-size knobs in ``KNOBS``. ``BENCH_SCALES=16 python
 bench.py NAME ...`` is the per-query scale run (16×/64× stress rows).
 
 Tools import the helpers: ``bench_session`` (engine session + KNOBS +
-replica dir), ``time_op`` (warmup, timed noop-sink runs, jobs/stages,
-codegen compiles), ``duckdb_con`` and ``time_sql`` (the comparator side).
+replica dir, its cold start recorded on request), ``time_op`` (warmup,
+timed noop-sink runs, jobs/stages, codegen compiles), ``duckdb_con`` and
+``time_sql`` (the comparator side).
 """
 
 from __future__ import annotations
@@ -128,14 +136,38 @@ def use_scale(spark, scale: int) -> str:
     return out
 
 
-def bench_session(app: str, scale: int = 1):
+def resolve_tables(spark, sf_dir: str) -> dict:
+    """Resolve every fixture table of ``sf_dir`` through
+    ``io.load_table``. Returns ``{"resolve_tables_s", "resolve_jobs"}``:
+    the jobs are the status-tracker diff ``time_op`` takes, read after
+    the listener bus has delivered every job start."""
+    from manual_data_ingest_spark import io
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    secs = timed(lambda: [io.load_table(spark, sf_dir, name)
+                          for name in io.TABLES])
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [j for j in tracker.getJobIdsForGroup(None) if j not in before]
+    return {"resolve_tables_s": secs, "resolve_jobs": len(jobs)}
+
+
+def bench_session(app: str, scale: int = 1, setup: dict | None = None):
     """The engine session with the bench KNOBS applied (env wins), sized
-    for ``scale``. Returns ``(spark, sf_dir)``."""
+    for ``scale``, with every ``SF_DIR`` table resolved. The cold start
+    goes into ``setup`` when given: ``get_spark_s`` plus
+    :func:`resolve_tables`' record. Returns ``(spark, sf_dir)``."""
     from manual_data_ingest_spark.session import get_spark
 
+    t0 = time.perf_counter()
     spark = get_spark(app)
+    get_spark_s = round(time.perf_counter() - t0, 4)
     for key in KNOBS:
         spark.conf.set(key, _knob(key))
+    resolved = resolve_tables(spark, SF_DIR)
+    if setup is not None:
+        setup.update(get_spark_s=get_spark_s, **resolved)
     return spark, use_scale(spark, scale)
 
 
@@ -272,7 +304,8 @@ def bench_scale(spark, scale: int, names: list[str]) -> dict:
 
 
 def main(names: list[str]) -> None:
-    spark, _ = bench_session("mdis-bench")
+    setup: dict = {}
+    spark, _ = bench_session("mdis-bench", setup=setup)
     per_scale = {f"{s}x": bench_scale(spark, s, names) for s in SCALES}
     # Back to the 1x partition base before probing the floor (r3
     # advisor): the floor is subtracted from 1x numbers — it must pair
@@ -297,6 +330,7 @@ def main(names: list[str]) -> None:
         "ratio_above_floor": ratio_above_floor,
         "median_ratio": base["median_ratio"],
         "scales": {k: v for k, v in per_scale.items() if k != "1x"},
+        "setup": setup,
     }
     print(json.dumps(out))
 

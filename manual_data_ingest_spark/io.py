@@ -1,7 +1,8 @@
 """Table loaders for the fixture star schema (FIXTURES.md).
 
-All loads are plain ``spark.read.parquet`` — scans stay columnar and
-Catalyst pushes filters/projections into the parquet reader. The one
+All loads are plain parquet scans — scans stay columnar and Catalyst
+pushes filters/projections into the parquet reader; the schema comes
+from one footer read on the driver (:func:`parquet_schema`). The one
 special case is ``events``: its ``ts`` column is parquet TIMESTAMP(NANOS),
 which the engine session reads as bigint nanos (see session.py) and this
 module converts to a proper µs TimestampType column via integer division
@@ -11,12 +12,14 @@ double's 53-bit mantissa, so float division would corrupt low microseconds).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: every fixture table (TESTDATA.md)
 TABLES = (
@@ -32,14 +35,20 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. ``events`` gets its ts converted (see module doc).
 
-    The analyzed DataFrame is cached per (session, sf_dir, table):
-    ``spark.read.parquet`` without a schema pays file listing plus one
-    footer schema-inference Spark JOB on EVERY call — 3.2 s for the
-    first table in a cold JVM, then 0.16-0.19 s per table (sf0.01,
-    4 cores) — which at the bench's sub-second query scale was ~half of
-    some queries' wall time (measured via the plan-build/execution
-    split on flagship_q3). Sinks that read their own output back pass
-    the schema they wrote with, for the same reason. A DataFrame is an
+    No Spark job: the schema is read on the driver from one parquet
+    footer (:func:`parquet_schema`) and passed as
+    ``spark.read.schema(s).parquet(path)``. Spark's own inference
+    (``spark.read.parquet(path)`` with no schema) launches one job per
+    table to read that same footer. On 4 cores, resolving the ten tables
+    in a cold perfbench set-up took 2.01 s with inference and 1.16 s from
+    the footers (medians of 10 ``curator_batch`` runs); in a warm session,
+    54 ms and 14 ms per sf0.01 table.
+
+    The analyzed DataFrame is cached per (session, sf_dir, table): even
+    without the job, a resolve pays the footer read, the file listing
+    and analysis, which the cache keeps out of every query after the
+    first. Sinks that read their own output back pass the schema they
+    wrote with, for the same reason. A DataFrame is an
     immutable logical plan, so reuse is semantics-free; this is the same
     move a real deployment makes by resolving tables through a catalog
     (metastore schema cache) instead of re-listing files per query. The
@@ -53,11 +62,77 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (sf_dir, name)
     df = cache.get(key)
     if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        path = f"{sf_dir}/{name}.parquet"
+        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
         if name == "events":
             df = _convert_event_ts(df)
         cache[key] = df
     return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    from one footer, so no Spark job runs.
+
+    The footer is the one Spark's inference reads when ``mergeSchema``
+    is off: a ``_common_metadata``, else a ``_metadata`` summary file,
+    else the first data file in path order. The conversion is Spark's
+    own (``ParquetFileFormat.readSchemaFromFooter`` with the session's
+    ``ParquetToSparkSchemaConverter``), so the session's type rules hold
+    (``nanosAsLong``, ``inferTimestampNTZ``, the Spark schema a Spark
+    writer stores in the footer), and the path may be any Hadoop URI.
+
+    Where no single footer decides the schema, Spark infers it: the path
+    does not exist, holds no data file, or holds a subdirectory
+    (partition discovery adds columns no footer has). Its errors and
+    partition columns stay Spark's own."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    status = _footer_file(fs, p) if fs.exists(p) else None
+    if status is None:
+        return spark.read.parquet(path).schema
+    pq = jvm.org.apache.parquet
+    skip_row_groups = pq.format.converter.ParquetMetadataConverter \
+        .SKIP_ROW_GROUPS
+    footer = pq.hadoop.ParquetFileReader.readFooter(conf, status,
+                                                    skip_row_groups)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        pq.hadoop.Footer(status.getPath(), footer),
+        parquet.ParquetToSparkSchemaConverter(state.conf()))
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def _footer_file(fs, p):
+    """The Hadoop ``FileStatus`` whose footer Spark's inference reads
+    for path ``p`` (see :func:`parquet_schema`), or None."""
+    status = fs.getFileStatus(p)
+    if not status.isDirectory():
+        return status
+    # summary files first, then data files in path order
+    files = {}
+    for kid in fs.listStatus(p):
+        where = kid.getPath().toString()
+        name = where.rsplit("/", 1)[-1]
+        if _hidden(name):
+            continue
+        if kid.isDirectory():
+            return None
+        files[(name != "_common_metadata", name != "_metadata", where)] = kid
+    return files[min(files)] if files else None
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index filter (``InMemoryFileIndex``): names starting
+    with ``_`` or ``.`` are not data, except the parquet summary files
+    and ``_k=v`` partition dirs; nor are files still being copied."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return False
+    return ((name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_"))
 
 
 def clear_table_cache(spark: SparkSession, sf_dir: str | None = None) -> None:

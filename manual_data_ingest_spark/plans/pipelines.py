@@ -116,7 +116,10 @@ def pipeline_ingest_register(spark: SparkSession, sf_dir: str) -> DataFrame:
     The write/read-back is part of the operator (like sink_partitioned):
     what's verified is the on-disk partitioned registration manifest a
     downstream indexer would consume. Per-row uuid-api/entity-api POSTs
-    of the reference become this one bulk metadata write.
+    of the reference become this one bulk metadata write. The manifest
+    is rebalanced on ``bucket`` before the write, so a bucket is one
+    file rather than one per scan task; at scale AQE splits an
+    oversized bucket by bytes instead.
     """
     d = load_table(spark, sf_dir, "documents")
     manifest = (d.filter(F.length("text") == F.col("n_chars"))
@@ -130,7 +133,8 @@ def pipeline_ingest_register(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.pmod("doc_id", F.lit(16)).alias("bucket")))
     from manual_data_ingest_spark.sources.scans import _tmpdir
     out = _tmpdir("mdis_register_")
-    manifest.write.mode("overwrite").partitionBy("bucket").parquet(out)
+    (manifest.hint("rebalance", "bucket")
+     .write.mode("overwrite").partitionBy("bucket").parquet(out))
     # explicit schema: zero part files (empty input) breaks inference
     back = spark.read.schema(manifest.schema).parquet(out)
     return (back.groupBy(F.col("bucket").cast("long").alias("bucket"))

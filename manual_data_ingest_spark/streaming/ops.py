@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from manual_data_ingest_spark.functions.rounding import rnd, sql_rnd
+from manual_data_ingest_spark.io import load_table, parquet_schema
 from manual_data_ingest_spark.registry import register
 
 _SINK_COUNTER = itertools.count()
@@ -109,19 +110,12 @@ def _events_dir(sf_dir: str) -> str:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the events table (schema from a batch probe;
-    ns→µs ts conversion as in io.load_events). The RAW schema probe
-    (pre-conversion — the stream source needs the on-disk bigint ts) is
-    cached per session like io.load_table's plans: footer reads cost
-    ~50 ms per streaming query otherwise."""
-    cache = getattr(spark, "_mdis_raw_schema_cache", None)
-    if cache is None:
-        cache = {}
-        spark._mdis_raw_schema_cache = cache
-    schema = cache.get(sf_dir)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        cache[sf_dir] = schema
+    """Streaming read of the events table (ns→µs ts conversion as in
+    io.load_events). The stream source needs the RAW on-disk schema
+    (bigint ts), read from the parquet footer on the driver
+    (``io.parquet_schema``, no Spark job) on every call, so a
+    regenerated fixture dir is seen as it is now."""
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     st = spark.readStream.schema(schema).parquet(_events_dir(sf_dir))
     if dict(st.dtypes).get("ts") == "bigint":
         st = st.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -872,8 +866,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_stream_parity.py.
     """
     ev = read_events_stream(spark, sf_dir)
-    c = (spark.read.parquet(f"{sf_dir}/customer.parquet")
-         .select(F.col("c_custkey"), F.col("c_mktsegment")))
+    c = load_table(spark, sf_dir, "customer").select("c_custkey",
+                                                     "c_mktsegment")
     joined = ev.join(c, ev.user_id == c.c_custkey)
     agg = (joined.groupBy(F.col("c_mktsegment").alias("segment"),
                           "event_type")
@@ -925,8 +919,8 @@ def _checkpoint_resume_demo(spark: SparkSession, sf_dir: str):
     import shutil
     import tempfile
 
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .select("event_id", "event_type", "value"))
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type",
+                                                    "value")
     base = tempfile.mkdtemp(prefix="mdis_ckpt_resume_")
     _STREAM_DIRS[f"ckpt:{base}"] = base  # atexit cleanup
     src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"

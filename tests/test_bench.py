@@ -45,6 +45,38 @@ def test_time_op_record(spark):
     assert spark.conf.getAll == before
 
 
+def test_bench_session_records_cold_setup(spark, tmp_path, monkeypatch):
+    """``bench_session`` records the session build and the resolution of
+    every SF_DIR table under the keys of the JSON's ``setup`` record;
+    resolving a fresh dir's tables launches no Spark job. The session
+    and its confs are the test session's, as found."""
+    import shutil
+
+    import bench
+    from manual_data_ingest_spark import io, session
+
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf_dir)
+    monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+    monkeypatch.setattr(session, "get_spark", lambda app: spark)
+    setup: dict = {}
+    before = spark.conf.getAll
+    try:
+        assert bench.bench_session("mdis-tests", setup=setup) == (spark,
+                                                                   sf_dir)
+    finally:
+        for key in bench.KNOBS:
+            if key in before:
+                spark.conf.set(key, before[key])
+            else:
+                spark.conf.unset(key)
+        io.clear_table_cache(spark, sf_dir)
+    assert spark.conf.getAll == before
+    assert set(setup) == {"get_spark_s", "resolve_tables_s", "resolve_jobs"}
+    assert setup["resolve_jobs"] == 0
+    assert setup["resolve_tables_s"] > 0
+
+
 def test_replica_dir_is_not_reused_across_sources(tmp_path):
     """A completed replica dir serves only the (multiplier, source) it
     was built from: the same build skips, another source raises instead

@@ -124,7 +124,6 @@ SLOW_PROBES = [
     "udf_sql_function", "win_holt_linear", "graph_reach_recursive",
     "scan_nested_pruned", "stream_static_enrich", "join_skew_aqe",
     "agg_benford_test", "ml_isotonic_calibration", "ingest_id_gap_islands",
-    "ml_lift_chart", "ml_threshold_sweep",
     "ml_conformal_interval",
     # r8 additions
     "join_runtime_bloom", "scan_agg_pushdown", "agg_exchange_reuse",
@@ -252,6 +251,15 @@ SLOW_NULL_PROBES = [
     "agg_benford_test", "ml_isotonic_calibration", "ingest_id_gap_islands",
     "ml_conformal_interval",
 ]
+
+
+@pytest.mark.parametrize("probes", [
+    FAST_PROBES + SLOW_PROBES, FAST_NULL_PROBES + SLOW_NULL_PROBES],
+    ids=["empty", "nulls"])
+def test_probe_lists_name_each_op_once(probes):
+    """A repeated name runs the same probe twice under ``name0``/``name1``
+    ids; each op belongs in one tier of one sweep once."""
+    assert sorted(n for n in set(probes) if probes.count(n) > 1) == []
 
 
 @pytest.fixture(scope="module")

@@ -1233,6 +1233,50 @@ def test_recursive_cte_runs_engine_side(spark):
     assert "UnionLoop" in plan or "Recursion" in plan, plan
 
 
+def test_register_writes_one_file_per_bucket(spark, tmp_path,
+                                            monkeypatch):
+    """pipeline_ingest_register: each ``bucket=`` dir of the written
+    manifest holds ONE parquet file even when the corpus arrives as
+    several part files (without the rebalance every scan task writes a
+    file into every bucket), and the summary still equals the oracle."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from manual_data_ingest_spark.sources import scans
+    from tests.oracle_check import compare, duckdb_connect
+
+    dst = str(tmp_path / "parts")
+    shutil.copytree(SF_ORACLE, dst)
+    docs = pq.read_table(f"{dst}/documents.parquet")
+    os.remove(f"{dst}/documents.parquet")
+    os.makedirs(f"{dst}/documents.parquet")
+    step = -(-docs.num_rows // 4)
+    for i in range(4):
+        pq.write_table(docs.slice(i * step, step),
+                       f"{dst}/documents.parquet/part-{i}.parquet")
+    outs: list[str] = []
+    mkdtemp = scans._tmpdir
+
+    def tmpdir(prefix: str) -> str:
+        outs.append(mkdtemp(prefix))
+        return outs[-1]
+
+    monkeypatch.setattr(scans, "_tmpdir", tmpdir)
+    name = "pipeline_ingest_register"
+    res = compare(name, E.queries()[name](spark, dst), duckdb_connect(dst),
+                  E.oracle_sql()[name])
+    assert res.ok, res
+    (out,) = outs
+    buckets = [d for d in os.listdir(out) if d.startswith("bucket=")]
+    assert len(buckets) == 16
+    for b in buckets:
+        files = [f for f in os.listdir(f"{out}/{b}")
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+
+
 def test_stream_static_join_is_stateless(spark):
     """stream_static_enrich: the stream-static join must plan WITHOUT
     a stream-stream join state store — only the downstream aggregation
