@@ -28,6 +28,9 @@ row-for-row against the same query on the in-process local session:
   ``stream_transform_with_state`` — chained state stores, foreachBatch
   closures, and Python arbitrary state across executor JVMs (r7
   verdict #7: state-machinery evidence for every stateful shape)
+- ``udf_pandas_scalar`` / ``multimodal_decode`` — a scalar pandas UDF
+  and ``mapInPandas`` whose workers fork from the engine's worker
+  daemon, started by each executor in its own working directory
 """
 
 from __future__ import annotations
@@ -78,7 +81,10 @@ _QUERIES = ["flagship_q3", "dedup_near_minhash", "sim_topk", "udf_grouped_map",
             # r8 new op: RESTART machinery across real executor JVMs —
             # the resumed query reloads state-store files written by
             # the first run's executors and replays the offset log
-            "stream_checkpoint_resume"]
+            "stream_checkpoint_resume",
+            # Python workers fork from the engine's daemon module, which
+            # each executor JVM must find from its own working directory
+            "udf_pandas_scalar", "multimodal_decode"]
 
 _RUNNER = """
 import json, sys

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from manual_data_ingest_spark.session import (
-    _EXTERNAL_KEEP, ENGINE_CONFIGS, codegen_compiles, ensure_engine_configs)
+    _EXTERNAL_KEEP, DAEMON_DIR, ENGINE_CONFIGS, codegen_compiles,
+    ensure_engine_configs)
 
 SHJ = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
 DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
@@ -52,6 +55,19 @@ def test_engine_session_skips_call_site_capture(spark, monkeypatch):
     # the engine session
     monkeypatch.setattr(U, "_enable_debugging_cache", None)
     assert U.is_debugging_enabled() is False
+
+
+def test_engine_session_starts_workers_from_repo_daemon(spark):
+    """get_spark sets the static daemon key, and puts the daemon's
+    directory first on the executors' PYTHONPATH, which pyspark passes
+    to every Python worker it starts."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "mdis_daemon"
+    path = conf.get("spark.executorEnv.PYTHONPATH").split(os.pathsep)
+    assert path[0] == DAEMON_DIR
+    assert os.path.isfile(os.path.join(DAEMON_DIR, "mdis_daemon.py"))
+    assert spark.sparkContext.environment["PYTHONPATH"] == os.pathsep.join(
+        path)
 
 
 @pytest.mark.parametrize("key", sorted(ENGINE_CONFIGS))
