@@ -9,19 +9,20 @@ $SPARK_GRAFT_SF_DIR (default: the sf0.1 fixture, ``SF_DIR``) on
 local[$SPARK_GRAFT_CPUS], one warmup + N timed runs each, against the
 same queries' DuckDB oracles, prints one progress line per query to
 stderr and ONE JSON line to stdout. Top-level keys keep the exact r1/r2
-shape (cross-round comparability); the r2 verdict's ask — "promote the
-4×-replica protocol to the canonical bench" — lands as a ``scales``
-key: the SAME queries and the SAME DuckDB comparator run on N× replica
-dirs (tests/make_replicas.py: facts replicated with offset keys, dims
-copied once). The ratio falls with data size at fixed plan because
-Spark's per-query local-mode floor is constant while everything that
-grows, grows slower than DuckDB's runtime — the 4× block is the
-headline number for the 100 TB design claim; sf0.1 measures the floor.
+shape (cross-round comparability); the N× rows land under a ``scales``
+key: the SAME queries and the SAME DuckDB comparator run on
+``perfbench/fixture.py``'s generator at N × its sf0.1-class size (seed
+``GROWN_SEED``), whatever ``SF_DIR`` is. Each grown dir is built once,
+keyed on (N, seed) by the generator's ``_COMPLETE`` marker. The ratio
+falls with data size at fixed plan because Spark's per-query local-mode
+floor is constant while everything that grows, grows slower than
+DuckDB's runtime — sf0.1 measures the floor.
 
     {"metric": ..., "value": <sf0.1 total sec>, "unit": "sec",
      "queries": {...}, "sf": 0.1, "duckdb": {...}, "ratio": {...},
-     "median_ratio": ..., "scales": {"4x": {"queries": ..., "duckdb":
-     ..., "ratio": ..., "median_ratio": ..., "queries_le_2x": ...}},
+     "median_ratio": ..., "scales": {"4x": {"dir": ..., "build_s": ...,
+     "queries": ..., "duckdb": ..., "ratio": ..., "median_ratio": ...,
+     "queries_le_2x": ...}},
      "setup": {"get_spark_s": ..., "resolve_tables_s": ...,
                "resolve_jobs": ...}}
 
@@ -30,15 +31,15 @@ its first query: the session build, and resolving every table of
 $SPARK_GRAFT_SF_DIR through ``io.load_table`` (seconds, and the Spark
 jobs that launched).
 
-Env knobs: BENCH_RUNS (timed runs/query, default 3), BENCH_SCALES
-(comma list of replica multipliers, default "1,4"; "1" = plain sf dir),
-and the three data-size knobs in ``KNOBS``. ``BENCH_SCALES=16 python
-bench.py NAME ...`` is the per-query scale run (16×/64× stress rows).
+Env knobs: BENCH_RUNS (timed runs/query, default 3) and BENCH_SCALES
+(comma list of multipliers, default "1,4"; "1" = the plain sf dir).
+``BENCH_SCALES=16 python bench.py NAME ...`` is the per-query scale run
+(16×/64× stress rows).
 
-Tools import the helpers: ``bench_session`` (engine session + KNOBS +
-replica dir, its cold start recorded on request), ``time_op`` (warmup,
-timed noop-sink runs, jobs/stages, codegen compiles), ``duckdb_con`` and
-``time_sql`` (the comparator side).
+Tools import the helpers: ``bench_session`` (engine session + KNOBS,
+its cold start recorded on request), ``time_op`` (warmup, timed
+noop-sink runs, jobs/stages, codegen compiles) and ``time_sql`` (the
+comparator side).
 """
 
 from __future__ import annotations
@@ -58,26 +59,25 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TIMED_RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 SCALES = [int(s) for s in os.environ.get("BENCH_SCALES", "1,4").split(",")]
 
-#: bench-local data-size knobs, {session conf: (env override, default)},
-#: sized to sf0.1 ≈ 100 MB (BASELINE.md protocol: "partitions sized to
-#: the target SF"). Shuffle partitions: measured 10-30% off the
-#: per-query floor; split size: ~35% on scan-bound queries (the fixture
-#: tables are single files, so default 128m splits give one scan task);
-#: broadcast: in one JVM, building+broadcasting a >2 MB hash relation
-#: loses to an 8-partition shuffle — measured full-bench A/B: total
-#: 14.6→13.5 s, wins on every join-bearing headline (q3 0.93→0.64).
-#: Explicit broadcast() hints are unaffected.
-KNOBS = {
-    "spark.sql.shuffle.partitions": ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"),
-    "spark.sql.files.maxPartitionBytes":
-        ("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
-    "spark.sql.autoBroadcastJoinThreshold":
-        ("SPARK_GRAFT_AUTO_BROADCAST", "2097152"),
-}
+#: seed of the grown N× fixtures (the grown MULT-10 fixture's seed)
+GROWN_SEED = 1234
 
-#: fixture tables the DuckDB comparator sees as views
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+#: bench-local data-size session confs, sized to sf0.1 ≈ 100 MB
+#: (BASELINE.md protocol: "partitions sized to the target SF"); the
+#: engine's defaults are ``session.ENGINE_CONFIGS``. Shuffle partitions:
+#: measured 10-30% off the per-query floor; split size: ~35% on
+#: scan-bound queries (the fixture tables are single files, so default
+#: 128m splits give one scan task); broadcast: in one JVM,
+#: building+broadcasting a >2 MB hash relation loses to an 8-partition
+#: shuffle — measured full-bench A/B: total 14.6→13.5 s, wins on every
+#: join-bearing headline (q3 0.93→0.64). Explicit broadcast() hints are
+#: unaffected. Together they are 15% off the engine defaults at sf0.1
+#: (16.06 vs 18.48 s, ROADMAP item 10).
+KNOBS = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.files.maxPartitionBytes": "8m",
+    "spark.sql.autoBroadcastJoinThreshold": "2097152",
+}
 
 #: headline queries — one per major operator family (SURVEY.md §2)
 HEADLINE = [
@@ -105,11 +105,6 @@ HEADLINE = [
 ]
 
 
-def _knob(key: str) -> str:
-    env, default = KNOBS[key]
-    return os.environ.get(env, default)
-
-
 def _sf_from_dir(d: str) -> float:
     name = os.path.basename(d.rstrip("/"))
     try:
@@ -118,22 +113,18 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def use_scale(spark, scale: int) -> str:
-    """Point ``spark`` at replica multiplier ``scale``: shuffle
-    partitions track DATA SIZE (base × scale, runtime-settable, so one
-    session serves every scale). Returns the fixture dir, building the
-    replica dir once (1 = the plain sf dir). The dir name carries the
-    source's basename, so replicas of different sources never collide."""
-    base = int(_knob("spark.sql.shuffle.partitions"))
-    spark.conf.set("spark.sql.shuffle.partitions", str(base * scale))
+def scale_dir(scale: int) -> tuple[str, float]:
+    """The fixture dir of the ``scale``× row and the seconds its build
+    took: ``SF_DIR`` at 1, else perfbench's generator at ``scale`` ×
+    its sf0.1-class size, built once per (scale, ``GROWN_SEED``) — the
+    dir name carries both, and the generator's ``_COMPLETE`` marker
+    skips a finished build (``build_s`` 0)."""
     if scale == 1:
-        return SF_DIR
-    src = os.path.basename(SF_DIR.rstrip("/"))
-    out = f"/tmp/mdis_bench_{src}_{scale}x"
-    from tests.make_replicas import build  # idempotent (_COMPLETE marker)
+        return SF_DIR, 0.0
+    from perfbench import fixture
 
-    build(scale, SF_DIR, out)
-    return out
+    out = f"/tmp/mdis_bench_grown_{scale}x_s{GROWN_SEED}"
+    return out, round(fixture.build(out, scale, GROWN_SEED)["build_s"], 4)
 
 
 def resolve_tables(spark, sf_dir: str) -> dict:
@@ -153,22 +144,22 @@ def resolve_tables(spark, sf_dir: str) -> dict:
     return {"resolve_tables_s": secs, "resolve_jobs": len(jobs)}
 
 
-def bench_session(app: str, scale: int = 1, setup: dict | None = None):
-    """The engine session with the bench KNOBS applied (env wins), sized
-    for ``scale``, with every ``SF_DIR`` table resolved. The cold start
-    goes into ``setup`` when given: ``get_spark_s`` plus
-    :func:`resolve_tables`' record. Returns ``(spark, sf_dir)``."""
+def bench_session(app: str, setup: dict | None = None):
+    """The engine session with the bench KNOBS applied and every
+    ``SF_DIR`` table resolved. The cold start goes into ``setup`` when
+    given: ``get_spark_s`` plus :func:`resolve_tables`' record. Returns
+    ``(spark, SF_DIR)``."""
     from manual_data_ingest_spark.session import get_spark
 
     t0 = time.perf_counter()
     spark = get_spark(app)
     get_spark_s = round(time.perf_counter() - t0, 4)
-    for key in KNOBS:
-        spark.conf.set(key, _knob(key))
+    for key, value in KNOBS.items():
+        spark.conf.set(key, value)
     resolved = resolve_tables(spark, SF_DIR)
     if setup is not None:
         setup.update(get_spark_s=get_spark_s, **resolved)
-    return spark, use_scale(spark, scale)
+    return spark, SF_DIR
 
 
 def timed(fn) -> float:
@@ -225,21 +216,6 @@ def time_op(spark, fn, sf_dir: str, runs: int = TIMED_RUNS,
             "compiles": compiles}
 
 
-def duckdb_con(sf_dir: str):
-    """DuckDB connection with one view per fixture table in ``sf_dir``."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(f"PRAGMA threads={os.cpu_count()}")
-    for name in TABLES:
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(path):  # replica fixtures are part-file dirs
-            path += "/*.parquet"
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{path}')")
-    return con
-
-
 def time_sql(con, sql: str, runs: int = TIMED_RUNS) -> float:
     """Median seconds of ``sql`` on ``con`` after one warmup."""
     return median_time(lambda: con.execute(sql).fetchall(), runs)
@@ -271,8 +247,12 @@ def _median_ratio(values) -> float | None:
 
 def bench_scale(spark, scale: int, names: list[str]) -> dict:
     import __spark_entry__ as E
+    from tests.oracle_check import duckdb_connect
 
-    sf_dir = use_scale(spark, scale)
+    sf_dir, build_s = scale_dir(scale)
+    # shuffle partitions track data size: the 1× base times the multiplier
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(int(KNOBS["spark.sql.shuffle.partitions"]) * scale))
     qs, oracles = E.queries(), E.oracle_sql()
     spark_times: dict[str, float] = {}
     job_counts: dict[str, dict[str, int]] = {}
@@ -280,7 +260,8 @@ def bench_scale(spark, scale: int, names: list[str]) -> dict:
         rec = time_op(spark, qs[name], sf_dir, label=f"bench:{name}")
         spark_times[name] = rec["median"]
         job_counts[name] = {k: rec[k] for k in ("jobs", "stages", "compiles")}
-    con = duckdb_con(sf_dir)
+    con = duckdb_connect(sf_dir)
+    con.execute(f"PRAGMA threads={os.cpu_count()}")
     duck_times = {n: time_sql(con, oracles[n]) for n in names if n in oracles}
     con.close()
     ratio = {k: round(spark_times[k] / duck_times[k], 2)
@@ -292,6 +273,7 @@ def bench_scale(spark, scale: int, names: list[str]) -> dict:
               file=sys.stderr, flush=True)
     return {
         "dir": sf_dir,
+        "build_s": build_s,
         "queries": spark_times,
         "job_counts": job_counts,
         "duckdb": duck_times,
@@ -310,7 +292,8 @@ def main(names: list[str]) -> None:
     # Back to the 1x partition base before probing the floor (r3
     # advisor): the floor is subtracted from 1x numbers — it must pair
     # with their partition config for cross-round comparability.
-    use_scale(spark, 1)
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   KNOBS["spark.sql.shuffle.partitions"])
     floor = measure_floor(spark)
 
     base = per_scale.get("1x") or per_scale[f"{SCALES[0]}x"]

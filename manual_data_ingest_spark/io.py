@@ -139,12 +139,12 @@ def clear_table_cache(spark: SparkSession, sf_dir: str | None = None) -> None:
     """Drop cached analyzed plans for ``sf_dir`` (or everything).
 
     The ``load_table`` cache assumes fixture dirs are IMMUTABLE for the
-    session lifetime — true for /root/testdata and for replica dirs
-    written once. If a replica dir (e.g. /tmp/mdis_scale_Nx) is
-    regenerated IN-PLACE inside a live session, the cached plan holds a
-    stale file listing; call this first (r2 advisor item, io.py:53).
-    tests/make_replicas.py skips completed dirs (_COMPLETE marker) for
-    the same reason.
+    session lifetime — true for the checked-in fixtures and for grown
+    dirs written once. If a fixture dir is regenerated IN-PLACE inside a
+    live session, the cached plan holds a stale file listing; call this
+    first (r2 advisor item, io.py:53). ``perfbench/fixture.py`` skips a
+    dir whose ``_COMPLETE`` marker names the same (scale, seed) for the
+    same reason.
     """
     cache = getattr(spark, "_mdis_table_cache", None)
     if cache is not None:

@@ -94,32 +94,28 @@ ENGINE_CONFIGS: dict[str, str] = {
     # the modern encoding, stats-complete and pyarrow/DuckDB-readable.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Shuffle partition count is a DATA-size decision, not a core-count
-    # one (BASELINE.md protocol: size partitions to the SF). Default
-    # tracks cores for the general case; SPARK_GRAFT_SHUFFLE_PARTITIONS
-    # overrides it where the data volume is known (bench.py sets 8 at
+    # one (BASELINE.md protocol: size partitions to the SF). The default
+    # tracks cores for the general case; a session owner who knows the
+    # data volume sets the runtime conf itself (bench.KNOBS sets 8 at
     # sf0.1 ≈ 100 MB — measured 10-30% off the per-query floor; a real
     # cluster at 100 TB sets thousands).
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    # Input split size is the scan-side twin of the shuffle knob: the
+    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    # Input split size is the scan-side twin of the shuffle conf: the
     # fixture tables are SINGLE parquet files, so the 128m default yields
     # one scan task regardless of cores; splitting at row-group
     # granularity parallelizes the scan (measured ~35% on scan-bound
-    # queries at sf0.1 with 8m). A 100 TB deployment keeps large splits —
-    # this tracks data size, not a constant.
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-    # Broadcast threshold is the third data-size knob: in a single JVM
+    # queries at sf0.1 with 8m, bench.KNOBS). A 100 TB deployment keeps
+    # large splits — this tracks data size, not a constant.
+    "spark.sql.files.maxPartitionBytes": "128m",
+    # Broadcast threshold is the third data-size conf: in a single JVM
     # the driver-side hash-relation build + broadcast of a >2 MB side
     # costs more than a small shuffle (flagship_q3 measured 0.68→0.41 s
-    # when its 17 MiB filtered-lineitem side shuffles instead), while a
-    # real cluster keeps the 10 MB default because broadcast avoids
-    # shuffling BOTH sides over the network. Explicit broadcast() hints
-    # (dimension tables, probe sets — small by construction) are
-    # unaffected by this threshold.
-    "spark.sql.autoBroadcastJoinThreshold": os.environ.get(
-        "SPARK_GRAFT_AUTO_BROADCAST", "10485760"),
+    # when its 17 MiB filtered-lineitem side shuffles instead; bench.KNOBS
+    # sets 2 MB), while a real cluster keeps the 10 MB default because
+    # broadcast avoids shuffling BOTH sides over the network. Explicit
+    # broadcast() hints (dimension tables, probe sets — small by
+    # construction) are unaffected by this threshold.
+    "spark.sql.autoBroadcastJoinThreshold": "10485760",
     # Python call-site capture per Column call (module doc); static, so
     # it takes effect only in get_spark's builder.
     "spark.python.sql.dataFrameDebugging.enabled": "false",

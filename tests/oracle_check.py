@@ -38,13 +38,15 @@ class UnhashableOutput(TypeError):
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per fixture table in ``sf_dir``."""
     import os
 
+    from manual_data_ingest_spark.io import TABLES
+
     con = duckdb.connect()
-    for name in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
+    for name in TABLES:
         path = f"{sf_dir}/{name}.parquet"
-        if os.path.isdir(path):  # replica fixtures are part-file dirs
+        if os.path.isdir(path):  # grown fixtures are part-file dirs
             path += "/*.parquet"
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"

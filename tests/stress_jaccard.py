@@ -28,7 +28,6 @@ which encode the same kept-shingle semantics.
 
 from __future__ import annotations
 
-import os
 import statistics
 import sys
 import tempfile
@@ -78,12 +77,12 @@ def _timed(fn, runs: int = 2) -> float:
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     from manual_data_ingest_spark.session import get_spark
     import __spark_entry__ as E
 
     n_base = int(sys.argv[1]) if len(sys.argv) > 1 else 1500
     spark = get_spark("jaccard-stress")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     qs = E.queries()
     print(f"scale  docs   uncapped_s  capped_s  uncapped_pairs  capped_pairs")
     for scale in (1, 4):

@@ -1,6 +1,6 @@
 """The shared bench protocol in bench.py: the timing record every
-measurement tool uses, an environment-neutral import, and replica dirs
-that are never reused across sources."""
+measurement tool uses, an environment-neutral import, the grown N× fixture
+dirs, and the tools that import bench."""
 
 from __future__ import annotations
 
@@ -8,23 +8,18 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
-import pytest
-
-from tests.conftest import _REPO, SF_ORACLE, SF_SMALL
-
-KNOB_ENV = ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "SPARK_GRAFT_MAX_PARTITION_BYTES",
-            "SPARK_GRAFT_AUTO_BROADCAST")
+from tests.conftest import _REPO, SF_SMALL
 
 
 def test_import_bench_leaves_environ_unchanged():
     """The bench knobs are session confs, not process env: importing
     bench (as test_registry does) must not leak them into the caller."""
-    env = {k: v for k, v in os.environ.items() if k not in KNOB_ENV}
     code = ("import json, os; before = dict(os.environ); import bench; "
             "print(json.dumps(sorted(set(os.environ.items()) "
             "^ set(before.items()))))")
-    out = subprocess.run([sys.executable, "-c", code], cwd=_REPO, env=env,
+    out = subprocess.run([sys.executable, "-c", code], cwd=_REPO,
                          capture_output=True, text=True, check=True)
     assert json.loads(out.stdout) == []
 
@@ -77,16 +72,51 @@ def test_bench_session_records_cold_setup(spark, tmp_path, monkeypatch):
     assert setup["resolve_tables_s"] > 0
 
 
-def test_replica_dir_is_not_reused_across_sources(tmp_path):
-    """A completed replica dir serves only the (multiplier, source) it
-    was built from: the same build skips, another source raises instead
-    of silently handing back the first source's rows."""
-    from tests.make_replicas import build
+def test_scale_dir_grows_with_perfbench_fixture(monkeypatch, tmp_path):
+    """The 1× row is SF_DIR with no build; an N× row is perfbench's
+    generator at (N, GROWN_SEED), built once per row in a dir whose name
+    carries both, so a dir another (scale, seed) completed is never taken
+    as built."""
+    import bench
+    from perfbench import fixture
 
-    out = str(tmp_path / "rep")
-    build(2, SF_SMALL, out)
-    build(2, SF_SMALL, out)  # idempotent
-    with pytest.raises(ValueError, match="sf0.01"):
-        build(2, SF_ORACLE, out)
-    with pytest.raises(ValueError, match="replicas=3"):
-        build(3, SF_SMALL, out)
+    calls = []
+
+    def build(out, scale, seed):
+        calls.append((out, scale, seed))
+        return {"build_s": 1.5}
+
+    monkeypatch.setattr(fixture, "build", build)
+    assert bench.scale_dir(1) == (bench.SF_DIR, 0.0)
+    assert calls == []
+    out, build_s = bench.scale_dir(2)
+    assert calls == [(out, 2, bench.GROWN_SEED)] and build_s == 1.5
+    name = os.path.basename(out)
+    assert "2x" in name and str(bench.GROWN_SEED) in name
+    assert bench.scale_dir(3)[0] != out
+
+    d = tmp_path / "grown"
+    d.mkdir()
+    for scale, seed in ((3, bench.GROWN_SEED), (2, bench.GROWN_SEED + 1)):
+        (d / "_COMPLETE").write_text(fixture.marker_text(scale, seed) + "\n")
+        assert not fixture.is_built(str(d), 2, bench.GROWN_SEED)
+    (d / "_COMPLETE").write_text(fixture.marker_text(2, bench.GROWN_SEED))
+    assert fixture.is_built(str(d), 2, bench.GROWN_SEED)
+
+
+def test_tools_import_bench_helpers():
+    """Every tool that imports from bench still imports with Spark
+    unstarted, and opsweep's argument parser runs: deleting a bench
+    helper or flag a tool uses fails here, not at the tool's next run."""
+    tools = sorted(p.stem for p in (Path(_REPO) / "tools").glob("*.py")
+                   if "from bench import" in p.read_text())
+    assert {"floor", "opsweep", "capture_plans"} <= set(tools)
+    code = ("import importlib, sys; sys.path.insert(0, 'tools'); "
+            f"[importlib.import_module(m) for m in {tools!r}]; "
+            "from pyspark import SparkContext; "
+            "assert SparkContext._active_spark_context is None")
+    subprocess.run([sys.executable, "-c", code], cwd=_REPO, check=True)
+    out = subprocess.run([sys.executable, "tools/opsweep.py", "--help"],
+                         cwd=_REPO, capture_output=True, text=True,
+                         check=True)
+    assert "--out" in out.stdout

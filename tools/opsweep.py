@@ -7,9 +7,11 @@ warm run) at $SPARK_GRAFT_SF_DIR under the bench session config, and
 appends one JSON line per operator to the output file as it goes
 (partial results survive interruption; operators already in the file
 are skipped). Ranking the warm column is how the r12 round finds slow
-non-headline shapes the headline bench never sees.
+non-headline shapes the headline bench never sees. A scaled sweep
+points $SPARK_GRAFT_SF_DIR at a grown fixture dir
+(``python3 perfbench/fixture.py OUT N 1234``).
 
-Usage: python tools/opsweep.py [--out FILE] [--scale N] [name ...]
+Usage: python tools/opsweep.py [--out FILE] [name ...]
 """
 from __future__ import annotations
 
@@ -30,13 +32,12 @@ from bench import bench_session, time_op  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default="/tmp/opsweep.jsonl")
-    ap.add_argument("--scale", type=int, default=1)
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     import __spark_entry__ as E
 
-    spark, sf_dir = bench_session("mdis-opsweep", args.scale)
+    spark, sf_dir = bench_session("mdis-opsweep")
     qs = E.queries()
     names = args.names or list(qs)
     done = set()
@@ -47,7 +48,7 @@ def main() -> None:
         for i, name in enumerate(names):
             if name in done:
                 continue
-            rec: dict = {"name": name, "scale": args.scale}
+            rec: dict = {"name": name}
             try:
                 r = time_op(spark, qs[name], sf_dir, runs=1,
                             label=f"opsweep:{name}")
