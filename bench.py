@@ -118,13 +118,16 @@ def scale_dir(scale: int) -> tuple[str, float]:
     took: ``SF_DIR`` at 1, else perfbench's generator at ``scale`` ×
     its sf0.1-class size, built once per (scale, ``GROWN_SEED``) — the
     dir name carries both, and the generator's ``_COMPLETE`` marker
-    skips a finished build (``build_s`` 0)."""
+    skips a finished build (``build_s`` 0). The scale goes in as a
+    float, as the generator's CLI parses it, so a dir the CLI built
+    carries the same marker."""
     if scale == 1:
         return SF_DIR, 0.0
     from perfbench import fixture
 
     out = f"/tmp/mdis_bench_grown_{scale}x_s{GROWN_SEED}"
-    return out, round(fixture.build(out, scale, GROWN_SEED)["build_s"], 4)
+    stats = fixture.build(out, float(scale), GROWN_SEED)
+    return out, round(stats["build_s"], 4)
 
 
 def resolve_tables(spark, sf_dir: str) -> dict:

@@ -76,7 +76,8 @@ def test_scale_dir_grows_with_perfbench_fixture(monkeypatch, tmp_path):
     """The 1× row is SF_DIR with no build; an N× row is perfbench's
     generator at (N, GROWN_SEED), built once per row in a dir whose name
     carries both, so a dir another (scale, seed) completed is never taken
-    as built."""
+    as built, and a dir ``perfbench/fixture.py OUT 2 SEED`` completed (the
+    CLI parses the scale as a float) is."""
     import bench
     from perfbench import fixture
 
@@ -97,11 +98,11 @@ def test_scale_dir_grows_with_perfbench_fixture(monkeypatch, tmp_path):
 
     d = tmp_path / "grown"
     d.mkdir()
-    for scale, seed in ((3, bench.GROWN_SEED), (2, bench.GROWN_SEED + 1)):
+    for scale, seed in ((3, bench.GROWN_SEED), (2, bench.GROWN_SEED + 1),
+                        (2.0, bench.GROWN_SEED)):
         (d / "_COMPLETE").write_text(fixture.marker_text(scale, seed) + "\n")
-        assert not fixture.is_built(str(d), 2, bench.GROWN_SEED)
-    (d / "_COMPLETE").write_text(fixture.marker_text(2, bench.GROWN_SEED))
-    assert fixture.is_built(str(d), 2, bench.GROWN_SEED)
+        assert fixture.is_built(str(d), *calls[0][1:]) == (
+            (scale, seed) == (2, bench.GROWN_SEED))
 
 
 def test_tools_import_bench_helpers():

@@ -909,95 +909,31 @@ def test_bootstrap_fanout_is_generator_not_join(spark):
     assert "CartesianProduct" not in plan
 
 # ---------------------------------------------------------------------------
-# Registry-wide: no fact-table keyset may be hint-forced into a broadcast
+# No fact-table keyset may be hint-forced into a broadcast (the
+# registry-wide audit is tools/plan_audit.py's forced_fact_broadcast)
 # ---------------------------------------------------------------------------
-
-# Columns that only occur in the big/fact fixtures (orders, lineitem,
-# events, documents, embeddings). A broadcast-hinted subtree that scans
-# one of these relations RAW (no Aggregate/Limit/Window/Deduplicate
-# reduction anywhere under the hint) is a forced broadcast of
-# fact-table-scale data: at 100 TB the hint bypasses AQE's size check
-# and OOMs. Aggregated derivatives (centroids, distinct eval n-grams,
-# scalar thresholds) reduce cardinality and are legitimate.
-_FACT_MARKERS = ("o_orderkey", "l_orderkey", "l_partkey", "event_id",
-                 "doc_id", "emb_id")
-_REDUCERS = ("Aggregate", "GlobalLimit", "Window", "Deduplicate")
-
-
-def _forced_fact_broadcasts(plan) -> list:
-    """Walk a JVM logical plan; return the subtree strings of every
-    broadcast-hinted side that scans a raw fact relation unreduced."""
-    bad = []
-
-    def subtree_is_bad(node) -> bool:
-        txt = node.toString()
-        has_fact = any(
-            re.search(r"Relation \[[^\]]*" + re.escape(c), txt)
-            for c in _FACT_MARKERS)
-        reduced = any(k in txt for k in _REDUCERS)
-        return has_fact and not reduced
-
-    def walk(node):
-        cls = node.getClass().getSimpleName()
-        if cls == "Join":
-            jh = node.hint()
-            if "strategy=broadcast" in jh.toString():
-                # check each hinted side independently
-                for side, child_ix in (("left", 0), ("right", 1)):
-                    opt = jh.leftHint() if side == "left" else jh.rightHint()
-                    if opt.isDefined() and "broadcast" in opt.get().toString():
-                        child = node.children().apply(child_ix)
-                        if subtree_is_bad(child):
-                            bad.append(child.toString()[:200])
-        elif cls == "ResolvedHint":
-            if "broadcast" in node.hints().toString().lower():
-                child = node.children().apply(0)
-                if subtree_is_bad(child):
-                    bad.append(child.toString()[:200])
-        it = node.children().iterator()
-        while it.hasNext():
-            walk(it.next())
-
-    walk(plan)
-    return bad
-
 
 def test_forced_fact_broadcast_detector_positive_control(spark):
     """The detector must actually fire on the shape it polices: a raw
     orders keyset hint-forced into a broadcast against lineitem (the
-    exact pre-r5 ingest_validate shape, VERDICT.md r4 'What's wrong' #1)."""
+    exact pre-r5 ingest_validate shape, VERDICT.md r4 'What's wrong' #1).
+    tools/plan_audit.py runs the detector over every registered op."""
     from manual_data_ingest_spark.io import load_table
+    from tools.plan_audit import forced_fact_broadcasts
+
     orders = load_table(spark, SF_SMALL, "orders")
     lineitem = load_table(spark, SF_SMALL, "lineitem")
     ok = orders.select("o_orderkey")
     j = (lineitem.select("l_orderkey")
          .join(F.broadcast(ok), lineitem.l_orderkey == ok.o_orderkey,
                "left_anti"))
-    bad = _forced_fact_broadcasts(j._jdf.queryExecution().optimizedPlan())
+    bad = forced_fact_broadcasts(j._jdf.queryExecution().optimizedPlan())
     assert bad, "detector failed to flag a forced raw-fact broadcast"
     # and an aggregated derivative of the same table must NOT fire
     small = orders.groupBy("o_orderpriority").count()
     j2 = lineitem.join(F.broadcast(small), F.lit(True), "left")
-    ok2 = _forced_fact_broadcasts(j2._jdf.queryExecution().optimizedPlan())
+    ok2 = forced_fact_broadcasts(j2._jdf.queryExecution().optimizedPlan())
     assert not ok2, ok2
-
-
-@pytest.mark.slow  # fleet-wide plan capture (~3 min); tools/plan_audit.py
-# runs the same registry-wide audit at round close
-def test_no_forced_fact_table_broadcast_anywhere(spark):
-    """One loop over every registered plan (VERDICT.md r4 item 2): no
-    operator may hint-force a raw fact-table subtree into a broadcast.
-    Text pre-filter keeps the JVM tree walk off the hint-free majority."""
-    offenders = {}
-    for name, fn in E.queries().items():
-        df = fn(spark, SF_SMALL)
-        lp = df._jdf.queryExecution().optimizedPlan()
-        if "strategy=broadcast" not in lp.toString():
-            continue
-        bad = _forced_fact_broadcasts(lp)
-        if bad:
-            offenders[name] = bad[0]
-    assert not offenders, offenders
 
 
 def test_decontaminate_shuffled_never_broadcasts(spark):

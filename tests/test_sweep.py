@@ -3,13 +3,15 @@
 The full-registry rows run in tools/round_gates.sh. These tests pin
 what makes the rows a gate: a failing op or a misspelled name exits
 non-zero, every mutation keeps the source tables' shape and changes
-some cell, and round_gates.sh runs every row.
+some cell, and round_gates.sh runs every row, the plan audit, the
+sf0.001 oracle sweep and the whole slow tier.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import subprocess
 
 import pyarrow.parquet as pq
 import pytest
@@ -81,8 +83,25 @@ def test_mutations_keep_shape_and_change_cells(tmp_path):
 
 
 def test_round_gates_runs_every_row():
+    """round_gates.sh runs every sweep row, the fleet plan audit, a
+    strict oracle stage at SF_SMALL, and the whole slow tier: pytest over
+    tests/ with no file list, so a new slow test joins the gate."""
     with open(os.path.join(_REPO, "tools", "round_gates.sh")) as fh:
-        loop = re.search(r"^for row in (.*); do$", fh.read(), re.M)
+        script = fh.read().replace("\\\n", " ")
+    loop = re.search(r"^for row in (.*); do$", script, re.M)
     rows = loop.group(1).split()
     assert len(rows) == len(set(rows))
     assert set(rows) == set(sweep.MUTATIONS) | {"vanilla"}
+    assert re.search(r"^python tools/plan_audit\.py ", script, re.M)
+    assign = re.search(r"^SF_SMALL=.*$", script, re.M).group(0)
+    sf = subprocess.run(["bash", "-c", f'{assign}; echo "$SF_SMALL"'],
+                        cwd=_REPO, capture_output=True, text=True,
+                        check=True).stdout.strip()
+    assert sf == SF_SMALL
+    assert re.search(r'^SPARK_GRAFT_SF_DIR="\$SF_SMALL" +'
+                     r"python tests/oracle_check\.py ", script, re.M)
+    pytests = re.findall(r"^python -m pytest (.*)$", script, re.M)
+    assert len(pytests) == 1
+    args = pytests[0].split("|")[0].split()
+    assert args[0] == "tests/" and "-m slow" in " ".join(args)
+    assert not [a for a in args if a.endswith(".py")], args

@@ -3,7 +3,7 @@
 
 Mechanizes the scale audit the round judges run by hand ("7 ops rank
 the full entity population through an unpartitioned window" — r8
-verdict): build every registered operator's plan and flag the three
+verdict): build every registered operator's plan and flag the four
 anti-pattern classes that silently kill a 100 TB run while passing
 every correctness gate:
 
@@ -25,6 +25,11 @@ every correctness gate:
 3. **BatchEvalPython** — a row-at-a-time (non-Arrow) Python UDF in
    the plan. Only the deliberate API-demo `udf_python_scalar` keeps
    one (its Arrow twins sit beside it).
+4. **Forced fact broadcast** — a broadcast hint over a subtree that
+   scans a raw fact relation with no reduction under the hint. The
+   hint bypasses AQE's size check, so at 100 TB it OOMs. Read from the
+   optimized logical plan, where the hints sit on the Join node; flags
+   as `forced_fact_broadcast`.
 
 The whitelist is machine-checked BOTH ways: a non-whitelisted hit
 fails the audit, and a whitelisted op that no longer exhibits its
@@ -126,6 +131,53 @@ def audit_plan(plan: str) -> set[str]:
     return hits
 
 
+#: columns that only occur in the big/fact fixtures (orders, lineitem,
+#: events, documents, embeddings). Aggregated derivatives (centroids,
+#: distinct eval n-grams, scalar thresholds) reduce cardinality and may
+#: be broadcast.
+FACT_MARKERS = ("o_orderkey", "l_orderkey", "l_partkey", "event_id",
+                "doc_id", "emb_id")
+REDUCERS = ("Aggregate", "GlobalLimit", "Window", "Deduplicate")
+
+
+def forced_fact_broadcasts(plan) -> list:
+    """Walk a JVM logical plan; return the subtree strings of every
+    broadcast-hinted side that scans a raw fact relation unreduced."""
+    bad = []
+
+    def subtree_is_bad(node) -> bool:
+        txt = node.toString()
+        has_fact = any(
+            re.search(r"Relation \[[^\]]*" + re.escape(c), txt)
+            for c in FACT_MARKERS)
+        reduced = any(k in txt for k in REDUCERS)
+        return has_fact and not reduced
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "Join":
+            jh = node.hint()
+            if "strategy=broadcast" in jh.toString():
+                # check each hinted side independently
+                for side, child_ix in (("left", 0), ("right", 1)):
+                    opt = jh.leftHint() if side == "left" else jh.rightHint()
+                    if opt.isDefined() and "broadcast" in opt.get().toString():
+                        child = node.children().apply(child_ix)
+                        if subtree_is_bad(child):
+                            bad.append(child.toString()[:200])
+        elif cls == "ResolvedHint":
+            if "broadcast" in node.hints().toString().lower():
+                child = node.children().apply(0)
+                if subtree_is_bad(child):
+                    bad.append(child.toString()[:200])
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(plan)
+    return bad
+
+
 def main() -> None:
     from manual_data_ingest_spark.session import get_spark
     import __spark_entry__ as E
@@ -142,11 +194,17 @@ def main() -> None:
             continue
         n += 1
         try:
-            plan = fn(spark, sf)._jdf.queryExecution().explainString(mode)
+            qe = fn(spark, sf)._jdf.queryExecution()
+            hits = audit_plan(qe.explainString(mode))
+            # text pre-filter keeps the JVM tree walk off the hint-free
+            # majority
+            optimized = qe.optimizedPlan()
+            if ("strategy=broadcast" in optimized.toString()
+                    and forced_fact_broadcasts(optimized)):
+                hits.add("forced_fact_broadcast")
         except Exception as exc:
             errs.append((name, f"{type(exc).__name__}: {exc}"[:100]))
             continue
-        hits = audit_plan(plan)
         allowed = WHITELIST.get(name, set())
         extra = hits - allowed
         missing = allowed - hits

@@ -8,9 +8,10 @@ session. Each mutation injects a value class the standard fixture
 never has, so every diverger is a real cross-engine semantics
 question. A CONFIGS row runs the unmutated sf0.01 fixture in that
 session; `vanilla` is the driver's bare session, with none of the
-engine configs. The per-commit subsets of the mutation rows are the
-*_ORACLE_EXACT lists in tests/test_empty_input.py, which build their
-fixtures with `build`; PARITY.md holds what each row found.
+engine configs. tools/round_gates.sh runs every row over every op;
+no per-commit subset of a row is kept in the test suite (the fast NULL
+no-crash panel in tests/test_empty_input.py builds its fixture with
+`build`). PARITY.md holds what each row found.
 
 Usage:  python tools/sweep.py ROW [op ...]   # ROW: a MUTATIONS or CONFIGS name
 Prints one BAD line per op that is not OK, then one SUMMARY line.
